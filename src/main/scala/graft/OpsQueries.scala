@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Lsh, Materialize, MinHash, Similarity}
+import graft.ops.{Lsh, Materialize, MinHash, SessionMemo, Similarity}
 
 /** Training-data pipeline operators over the `documents` and `embeddings`
   * tables: deduplication (exact, n-gram Jaccard, MinHash+LSH, SimHash,
@@ -32,24 +32,20 @@ object OpsQueries {
     * round-3 prescription. The frame is narrow (id + shingle array) and
     * deterministic, so memoization cannot change any result.
     */
-  // Correctness contract of the memo: the parquet under `dir` is immutable
-  // for the session's lifetime (true for the read-only testdata and for
-  // any sane catalog snapshot). Entries of STOPPED sessions are purged on
-  // every access so a long-lived JVM cycling sessions (test suites,
-  // repeated bench mains) cannot accumulate dead session/block references.
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def docShingles(spark: SparkSession, dir: String): DataFrame = {
-    shingleCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    shingleCache.computeIfAbsent((spark, dir), k =>
-      graft.ops.IncrementalDedup.shingles(docs(k._1, k._2), "text")
+  // Memo contract (every memo below, graft.ops.SessionMemo): the parquet
+  // under `dir` is immutable for the session's lifetime (true for the
+  // read-only testdata and for any sane catalog snapshot).
+  private def docShingles(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo(spark, "docShingles", dir) {
+      graft.ops.IncrementalDedup.shingles(docs(spark, dir), "text")
         .select("doc_id", "toks")
-        .localCheckpoint())
-  }
+        .localCheckpoint()
+    }
 
   /** (id_a, id_b) — the UNCAPPED MinHash candidate pair set over the whole
-    * documents table, memoized per (session, dir) exactly like the shingle
-    * frame (round-4 verdict item #9: pairs are the next shared frame).
+    * documents table, memoized per (session, dir, bands, rows) like the
+    * shingle frame (round-4 verdict item #9: pairs are the next shared
+    * frame).
     * Band hashes are per-doc, so the pair set of any doc SUBSET is exactly
     * this set restricted to pairs with both endpoints in the subset — the
     * composed corpus pipelines therefore FILTER this frame (two ids-only
@@ -59,14 +55,11 @@ object OpsQueries {
     * holds uncapped — a hot-bucket-capped run must re-band (the cap sees
     * different bucket sizes on a subset), so capped callers bypass this.
     */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def docPairs(spark: SparkSession, dir: String): DataFrame = {
-    pairCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pairCache.computeIfAbsent((spark, dir), k =>
-      MinHash.candidatePairs(docShingles(k._1, k._2), "doc_id", "toks",
-        MinhashBands, MinhashRows))
-  }
+  private def docPairs(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo(spark, "docPairs", dir, MinhashBands, MinhashRows) {
+      MinHash.candidatePairs(docShingles(spark, dir), "doc_id", "toks",
+        MinhashBands, MinhashRows)
+    }
 
   /** The distinct 8-gram hash set of the EVAL split (doc_id >= 450) —
     * the decontamination family's reference side — memoized per
@@ -77,17 +70,14 @@ object OpsQueries {
     * split the eval side is the LARGER gram set. Narrow (one hash
     * column), deterministic — memoization cannot change any result.
     */
-  private val evalGramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def evalGrams(spark: SparkSession, dir: String): DataFrame = {
-    evalGramsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
+  private def evalGrams(spark: SparkSession, dir: String): DataFrame =
     // Derived from the session's single gram pass (docGrams, round-8) —
     // the distinct-gh frame keeps its own checkpoint because consumers
     // treat it as the (small) sketch/build side.
-    evalGramsCache.computeIfAbsent((spark, dir), k =>
-      docGrams(k._1, k._2).filter(col("doc_id") >= 450)
-        .select("gh").distinct().localCheckpoint())
-  }
+    SessionMemo(spark, "evalGrams", dir) {
+      docGrams(spark, dir).filter(col("doc_id") >= 450)
+        .select("gh").distinct().localCheckpoint()
+    }
 
   /** (id, label) — the connected-components resolution of the FULL
     * memoized pair frame, memoized per (session, dir) exactly like the
@@ -98,13 +88,10 @@ object OpsQueries {
     * per-round materializations make the memoized frame a stored table —
     * downstream joins scan it, never replay the loop.
     */
-  private val compsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def docComps(spark: SparkSession, dir: String): DataFrame = {
-    compsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    compsCache.computeIfAbsent((spark, dir), k =>
-      graft.ops.ConnectedComponents.resolve(docPairs(k._1, k._2), "id_a", "id_b"))
-  }
+  private def docComps(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo(spark, "docComps", dir) {
+      graft.ops.ConnectedComponents.resolve(docPairs(spark, dir), "id_a", "id_b")
+    }
 
   /** (doc_id, gh) — every doc's DISTINCT 8-gram hashes over the whole
     * corpus, memoized per (session, dir) (round-8): gram hashing is
@@ -116,13 +103,10 @@ object OpsQueries {
     * the eval-gram memo build). Narrow (id + hash) rows, deterministic —
     * memoization cannot change any result.
     */
-  private val gramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def docGrams(spark: SparkSession, dir: String): DataFrame = {
-    gramsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    gramsCache.computeIfAbsent((spark, dir), k =>
-      gramHashes(docs(k._1, k._2)).localCheckpoint())
-  }
+  private def docGrams(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo(spark, "docGrams", dir) {
+      gramHashes(docs(spark, dir)).localCheckpoint()
+    }
 
   /** (doc_id, line_idx, lh) — every doc's line-unit hashes in document
     * order, memoized per (session, dir) (round-8): unit hashing is
@@ -130,13 +114,10 @@ object OpsQueries {
     * dd_line_provenance, both sides of q_incremental_linededup — four
     * unit text passes per session collapsed into one.
     */
-  private val lineUnitsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def docLineUnits(spark: SparkSession, dir: String): DataFrame = {
-    lineUnitsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    lineUnitsCache.computeIfAbsent((spark, dir), k =>
-      graft.ops.LineDedup.unitHashes(docs(k._1, k._2), "text").localCheckpoint())
-  }
+  private def docLineUnits(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo(spark, "docLineUnits", dir) {
+      graft.ops.LineDedup.unitHashes(docs(spark, dir), "text").localCheckpoint()
+    }
 
   /** (doc_id, pos, gh) — every doc's POSITIONED 8-gram hashes, memoized
     * per (session, dir) (round-8): positioned grams are per-doc, so
@@ -144,36 +125,21 @@ object OpsQueries {
     * provenance and both sides of q_incremental_substring — five
     * positioned-gram text passes per session collapsed into one.
     */
-  private val posGramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def docPosGrams(spark: SparkSession, dir: String): DataFrame = {
-    posGramsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    posGramsCache.computeIfAbsent((spark, dir), k =>
-      graft.ops.SubstringDedup.positionedGrams(docs(k._1, k._2), "text")
-        .localCheckpoint())
-  }
+  private def docPosGrams(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo(spark, "docPosGrams", dir) {
+      graft.ops.SubstringDedup.positionedGrams(docs(spark, dir), "text")
+        .localCheckpoint()
+    }
 
   /** The email/number scrub used by corpus_build's released text hash —
     * one definition so the memoized meta pass below and any future
     * caller can never drift.
     */
-  private[graft] def scrubbedCol: Column = {
+  private def scrubbedCol: Column = {
     val emailRe = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
     regexp_replace(
       regexp_replace(col("text"), emailRe, "<EMAIL>"), "[0-9]+", "<NUM>")
   }
-
-  /** The docMeta PROJECTION over a documents frame — exposed so the
-    * measurement harness (BenchExtra's phase profile) times the exact
-    * pass the memo builds, not a re-inlined copy that could drift.
-    */
-  private[graft] def docMetaFrame(d: DataFrame): DataFrame =
-    d.select(
-      col("doc_id"), col("lang"),
-      qualityCol.as("quality"),
-      md5(col("text")).as("h"),
-      md5(scrubbedCol).as("scrub_hash"),
-      size(split(lower(col("text")), " ")).as("tokens"))
 
   /** (doc_id, lang, quality, h, scrub_hash, tokens) — every text-derived
     * SCALAR the corpus/mixing chains consume, computed in ONE memoized
@@ -198,13 +164,16 @@ object OpsQueries {
     * nightly shape — read the text twice; the fused pass optimizes the
     * shape the engine is measured on.
     */
-  private val docMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def docMeta(spark: SparkSession, dir: String): DataFrame = {
-    docMetaCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    docMetaCache.computeIfAbsent((spark, dir), k =>
-      docMetaFrame(docs(k._1, k._2)).localCheckpoint())
-  }
+  private def docMeta(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo(spark, "docMeta", dir) {
+      docs(spark, dir).select(
+        col("doc_id"), col("lang"),
+        qualityCol.as("quality"),
+        md5(col("text")).as("h"),
+        md5(scrubbedCol).as("scrub_hash"),
+        size(split(lower(col("text")), " ")).as("tokens"))
+        .localCheckpoint()
+    }
 
   /** (doc_id, label) — the exact-dedup survivors of the full-corpus
     * quality gate (score ≥ 0.4, min doc per content hash) left-joined to
@@ -215,12 +184,9 @@ object OpsQueries {
     * once per session instead of twice. Deterministic chain, narrow
     * (id + label) rows — memoization cannot change any result.
     */
-  private val qualityClusteredCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def qualityClustered(s: SparkSession, dir: String): DataFrame = {
-    qualityClusteredCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    qualityClusteredCache.computeIfAbsent((s, dir), k => {
-      val meta = docMeta(k._1, k._2).filter(col("quality") >= 0.4)
+  private def qualityClustered(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, "qualityClustered", dir) {
+      val meta = docMeta(s, dir).filter(col("quality") >= 0.4)
         .select(col("doc_id"), col("h"))
       // Materialized for the same three-consumer reason as corpusKeepIds:
       // a lazy exactKeep re-runs the (memoized, but still scanned) meta
@@ -228,12 +194,11 @@ object OpsQueries {
       val exactKeep = Materialize.stable(
         meta.groupBy("h").agg(min("doc_id").as("doc_id")).select("doc_id"),
         reliable = false)
-      val pairs = pairsWithin(docPairs(k._1, k._2), exactKeep)
+      val pairs = pairsWithin(docPairs(s, dir), exactKeep)
       val comps = graft.ops.ConnectedComponents.resolve(pairs, "id_a", "id_b")
         .withColumnRenamed("id", "doc_id")
       exactKeep.join(comps, Seq("doc_id"), "left").localCheckpoint()
-    })
-  }
+    }
 
   /** Every intermediate stage of the export funnel, ids-only (except
     * `mixed`, which carries (doc_id, lang, tokens)) — ONE definition
@@ -260,12 +225,8 @@ object OpsQueries {
     * ids-plus-scalars narrow and the chain is deterministic, so
     * memoization cannot change any result.
     */
-  private val exportCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), ExportStages]
-  private def exportStages(s: SparkSession, dir: String): ExportStages = {
-    exportCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    exportCache.computeIfAbsent((s, dir), k => buildExportStages(k._1, k._2))
-  }
+  private def exportStages(s: SparkSession, dir: String): ExportStages =
+    SessionMemo(s, "exportStages", dir)(buildExportStages(s, dir))
 
   // Every stage is checkpointed AS IT IS BUILT (round-8), so each
   // downstream stage's plan references the materialized upstream frame.
@@ -331,33 +292,26 @@ object OpsQueries {
     * and queried many times. Deterministic (seeds + one Lloyd step), so
     * memoization cannot change any result.
     */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]
-  private def ivfCents(spark: SparkSession, dir: String, nCells: Int): DataFrame = {
-    ivfCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    ivfCache.computeIfAbsent((spark, dir, nCells), k =>
-      Similarity.buildIvfTable(Similarity.prepare(emb(k._1, k._2)), k._3))
-  }
+  private def ivfCents(spark: SparkSession, dir: String, nCells: Int): DataFrame =
+    SessionMemo(spark, "ivfCents", dir, nCells) {
+      Similarity.buildIvfTable(Similarity.prepare(emb(spark, dir)), nCells)
+    }
 
   /** The driver-held IVF model (literal-centroid path), same memo rationale. */
-  private val ivfModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), Similarity.IvfModel]
-  private def ivfModel(spark: SparkSession, dir: String, nCells: Int): Similarity.IvfModel = {
-    ivfModelCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    ivfModelCache.computeIfAbsent((spark, dir, nCells), k =>
-      Similarity.buildIvfModel(Similarity.prepare(emb(k._1, k._2)), k._3))
-  }
+  private def ivfModel(spark: SparkSession, dir: String, nCells: Int): Similarity.IvfModel =
+    SessionMemo(spark, "ivfModel", dir, nCells) {
+      Similarity.buildIvfModel(Similarity.prepare(emb(spark, dir)), nCells)
+    }
 
-  /** The 3-step k-means model over the embeddings table, memoized per
-    * (session, dir) — emb_kmeans and emb_diverse_sample fit it once.
+  /** The k-means model over the embeddings table, memoized per
+    * (session, dir, nCells, iters) — emb_kmeans and emb_diverse_sample
+    * fit it once.
     */
-  private val kmeansCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Similarity.IvfModel]
-  private def kmeans16x3(spark: SparkSession, dir: String): Similarity.IvfModel = {
-    kmeansCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    kmeansCache.computeIfAbsent((spark, dir), k =>
-      Similarity.kmeansModel(Similarity.prepare(emb(k._1, k._2)), 16, iters = 3))
-  }
+  private def kmeans(spark: SparkSession, dir: String, nCells: Int,
+      iters: Int): Similarity.IvfModel =
+    SessionMemo(spark, "kmeans", dir, nCells, iters) {
+      Similarity.kmeansModel(Similarity.prepare(emb(spark, dir)), nCells, iters = iters)
+    }
 
   // Null-signature caveat shared by every MinHash-derived oracle below:
   // a <3-word doc has toks = [] and list_min(...) = NULL; SQL equi-joins
@@ -386,12 +340,8 @@ object OpsQueries {
     * two-column frame (it formerly localCheckpoint'ed its own copy per
     * run anyway). Deterministic — memoization cannot change any result.
     */
-  private val simhashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def simhashFp(s: SparkSession, dir: String): DataFrame = {
-    simhashCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    simhashCache.computeIfAbsent((s, dir), k => simhashFpBuild(k._1, k._2))
-  }
+  private def simhashFp(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, "simhashFp", dir, SimhashBits)(simhashFpBuild(s, dir))
 
   private def simhashFpBuild(s: SparkSession, dir: String): DataFrame = {
     val words = docs(s, dir).select(col("doc_id"),
@@ -1008,7 +958,7 @@ object OpsQueries {
     //     sequentially, so the norm is cross-engine exact). ---
     "emb_kmeans" -> ((s: SparkSession, dir: String) => {
       import s.implicits._
-      val model = kmeans16x3(s, dir)
+      val model = kmeans(s, dir, 16, 3)
       val cents = model.centroids
         .map { case (c, cv) => (c, math.sqrt(cv.map(x => x * x).sum)) }
         .toDF("cell", "nrm")
@@ -1029,7 +979,7 @@ object OpsQueries {
     //     corpus (k ≈ √n), so no fixed-cardinality window bottleneck. ---
     "emb_diverse_sample" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.expressions.Window
-      val model = kmeans16x3(s, dir)
+      val model = kmeans(s, dir, 16, 3)
       val assigned = Similarity.prepare(emb(s, dir))
         .select(col("vec_id"), Similarity.assignCell(model).as("cell"),
           md5(col("vec_id").cast("string")).as("h"))

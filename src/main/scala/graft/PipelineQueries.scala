@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.agg.Rollup
 import graft.enrich.Enrich
 import graft.gen.TranscriptGen
+import graft.ops.SessionMemo
 import graft.parse.TranscriptParse
 import graft.route.Router
 
@@ -20,24 +21,24 @@ import graft.route.Router
 object PipelineQueries {
 
   private val N = 100000L
+  private val Partitions = 16
+  private val RowsPerMinute = 5000L
   private def transcript(s: SparkSession): DataFrame =
-    TranscriptGen.generate(s, N, 16, 5000)
+    TranscriptGen.generate(s, N, Partitions, RowsPerMinute)
 
-  /** The PARSED valid transcript frame, memoized per session (round-8):
-    * four pipe_* queries ran the identical generate → grok-parse pass;
-    * now the first pays and the rest read the checkpointed rows. The
-    * generator is pure index math and the parse deterministic, so
-    * memoization cannot change any result (same contract as
-    * OpsQueries' docShingles-family memos). pipe_quarantine keeps its
-    * own pass — it parses a MUTATED transcript (injected bad rows).
+  /** The PARSED valid transcript frame, memoized per (session, generator
+    * arguments) (round-8): four pipe_* queries ran the identical
+    * generate → grok-parse pass; now the first pays and the rest read
+    * the checkpointed rows. The generator is pure index math and the
+    * parse deterministic, so memoization cannot change any result (same
+    * contract as OpsQueries' docShingles-family memos). pipe_quarantine
+    * keeps its own pass — it parses a MUTATED transcript (injected bad
+    * rows).
     */
-  private val parsedCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]
-  private def parsedValid(s: SparkSession): DataFrame = {
-    parsedCache.keySet.removeIf(_.sparkContext.isStopped)
-    parsedCache.computeIfAbsent(s, k =>
-      TranscriptParse.parse(transcript(k))._1.localCheckpoint())
-  }
+  private def parsedValid(s: SparkSession): DataFrame =
+    SessionMemo(s, "parsedValid", N, Partitions, RowsPerMinute) {
+      TranscriptParse.parse(transcript(s))._1.localCheckpoint()
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

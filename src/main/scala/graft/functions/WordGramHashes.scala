@@ -96,7 +96,13 @@ object WordGramHashes {
     new GenericArrayData(out.toArray)
   }
 
-  /** Column API: word_gram_hashes(ws, k, distinct). */
+  /** Column API: word_gram_hashes(ws, k, distinct). Contract: NULL `ws`
+    * → NULL; fewer than k words (an empty array included) → an EMPTY
+    * array, where the raw HOF form's `sequence(1, size(ws) - k + 1)`
+    * would descend; otherwise one md5 hex per k-window (first
+    * occurrences only when `distinct`). WordGramHashesSpec pins the
+    * short-input rows.
+    */
   def wordGramHashes(ws: Column, k: Int, distinct: Boolean): Column =
     org.apache.spark.sql.GraftBridge.column(
       WordGramHashes(

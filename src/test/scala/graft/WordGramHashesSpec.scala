@@ -43,15 +43,27 @@ class WordGramHashesSpec extends SparkSpecBase {
     val df = spark.sql(
       """SELECT * FROM VALUES
         (array('a', 'b', 'c')),
-        (CAST(NULL AS ARRAY<STRING>)) AS t(ws)""")
+        (CAST(NULL AS ARRAY<STRING>)),
+        (array('a', 'b')),
+        (CAST(array() AS ARRAY<STRING>)) AS t(ws)""")
+    // the HOF reference is only defined for size(ws) >= k
     val out = df.select(
       WordGramHashes.wordGramHashes(col("ws"), 3, distinct = true).as("fast"),
-      expr("array_distinct(transform(sequence(1, size(ws) - 2), " +
-        "i -> md5(concat_ws(' ', slice(ws, i, 3)))))").as("ref")).collect()
+      expr("CASE WHEN size(ws) >= 3 THEN " +
+        "array_distinct(transform(sequence(1, size(ws) - 2), " +
+        "i -> md5(concat_ws(' ', slice(ws, i, 3))))) END").as("ref"),
+      WordGramHashes.wordGramHashes(col("ws"), 3, distinct = false).as("pos"))
+      .collect()
     out(0).getSeq[String](0) shouldBe out(0).getSeq[String](1)
     out(0).getSeq[String](0).length shouldBe 1
     out(1).isNullAt(0) shouldBe true
     out(1).isNullAt(1) shouldBe true
+    out(1).isNullAt(2) shouldBe true
+    // size(ws) < k, an empty array included: an empty array, both modes
+    for (r <- out.drop(2)) {
+      r.getSeq[String](0) shouldBe empty
+      r.getSeq[String](2) shouldBe empty
+    }
   }
 
   test("line-unit hashes: bit-identical to the nested HOF form") {
