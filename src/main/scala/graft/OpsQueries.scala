@@ -1144,7 +1144,7 @@ object OpsQueries {
     //     itself, dropped against the history store by one ids-only
     //     semi-join (text never moves), and its within-batch near-dups
     //     resolve transitively through connected components — exactly what
-    //     the streaming neardupSink does per micro-batch, here as an
+    //     the streaming processNeardupBatch does per micro-batch, here as an
     //     oracle-checkable batch query. Output: every quality-surviving
     //     batch doc with its keep/drop verdict. ---
     "q_corpus_incremental" -> ((s: SparkSession, dir: String) => {

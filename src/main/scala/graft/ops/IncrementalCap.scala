@@ -24,12 +24,12 @@ import org.apache.spark.sql.functions._
   * so the store stays tiny and the base-count aggregation is a
   * broadcast-sized map-side combine.
   *
-  * Crash semantics (the round-6 exactly-once protocol): the batch's doc
-  * verdicts and its count rows are batch_id-partitioned and REPLACED on
-  * replay (readers SUM the counts, so a duplicated count row would
-  * shrink every later batch's budget), the commit marker lands last,
-  * base counts read COMMITTED batches only, and batches commit in
-  * ascending batch_id order (enforced fail-fast).
+  * Commit and compaction follow [[StoreCompaction]]'s protocol. The
+  * batch's doc verdicts and its count rows are batch_id-partitioned and
+  * REPLACED on replay (readers SUM the counts, so a duplicated count row
+  * would shrink every later batch's budget), and base counts read
+  * COMMITTED batches only — ascending commits keep a batch from spending
+  * budget its own future has already spent.
   */
 object IncrementalCap {
 
@@ -56,10 +56,6 @@ object IncrementalCap {
       s"CAST(conv(substring(md5(CAST(`$idCol` AS STRING)), 1, 10), 16, 10) AS BIGINT)" +
         s" * 4194304 + pmod(`$idCol`, 4194304)")
 
-  /** Committed batch ids (the marker partitions). */
-  def committedBatches(catalog: graft.sink.TranscriptCatalog): Set[Long] =
-    catalog.listPartitionValues(MarkerTable, "batch_id").map(_.toLong).toSet
-
   /** Kept-so-far counts per source over the COMMITTED batches (empty —
     * without touching the not-yet-created store — before the first
     * commit). The committed-state predicate is the watermark-compacted
@@ -80,36 +76,25 @@ object IncrementalCap {
         .groupBy("source").agg(sum("kept_docs").as("base"))
 
   /** Fold committed batches beyond the `keepRecent` newest into the
-    * watermark base partition (the [[StoreCompaction]] protocol): the
+    * watermark base partition ([[StoreCompaction.compact]]): the
     * per-source counts of the folded batches — plus the previous base —
-    * are summed into ONE partition, their markers and raw partitions are
-    * GC'd, and every later [[baseCounts]] reads a bounded predicate.
-    * Verdicts are unchanged by construction (readers sum these rows;
-    * IncrementalCapSpec asserts identity). Idempotent and crash-safe:
-    * the watermark blob write is the commit point.
+    * are summed into ONE partition, so every later [[baseCounts]] reads a
+    * bounded predicate. Verdicts are unchanged by construction (readers
+    * sum these rows; IncrementalCapSpec asserts identity).
     */
   def compact(
       catalog: graft.sink.TranscriptCatalog,
       keepRecent: Int
-  ): Unit = {
-    val view = StoreCompaction.committedView(catalog, MarkerTable)
-    StoreCompaction.foldTarget(view, keepRecent).foreach { wNew =>
-      val foldIds = view.recent.filter(_ <= wNew)
-      val foldView = StoreCompaction.CommittedView(view.watermark, foldIds)
-      val folded = catalog.read(CountsTable)
-        .filter(foldView.statePredicate(col("batch_id")))
-        .groupBy("source").agg(sum("kept_docs").as("kept_docs"))
-        .withColumn("batch_id", lit(StoreCompaction.basePartition(wNew)))
-        .select("source", "kept_docs", "batch_id")
-      catalog.overwritePartitions(folded, CountsTable, Seq("batch_id"))
-      // COMMIT POINT.
-      StoreCompaction.writeWatermark(catalog, MarkerTable, wNew)
-      catalog.dropPartitions(CountsTable, "batch_id",
-        StoreCompaction.gcStatePartition(wNew))
-      catalog.dropPartitions(MarkerTable, "batch_id",
-        StoreCompaction.gcMarkerPartition(wNew))
+  ): Unit =
+    StoreCompaction.compact(catalog, MarkerTable, keepRecent, Some(CountsTable)) {
+      (foldView, wNew) =>
+        val folded = catalog.read(CountsTable)
+          .filter(foldView.statePredicate(col("batch_id")))
+          .groupBy("source").agg(sum("kept_docs").as("kept_docs"))
+          .withColumn("batch_id", lit(StoreCompaction.basePartition(wNew)))
+          .select("source", "kept_docs", "batch_id")
+        catalog.overwritePartitions(folded, CountsTable, Seq("batch_id"))
     }
-  }
 
   /** Rank `docs` (doc_id, source) within each source in hash order —
     * exclusive prefix COUNT, i.e. rank 0 is the source's first doc.
@@ -124,11 +109,11 @@ object IncrementalCap {
       "ord", "one", "keep_rank", blockSize, maxTopRows, keyCols = Seq("source"))
       .drop("ord", "one")
 
-  /** Cap one batch against the committed history and commit it.
-    * Replaying a committed batchId is a no-op; an out-of-order batchId
-    * fails fast. Verdicts land in [[DocsTable]] `(doc_id, source,
-    * keep_rank, kept, batch_id)` — every batch doc gets a row, so the
-    * drop decisions are auditable, not just the survivors.
+  /** Cap one batch against the committed history and commit it
+    * ([[StoreCompaction.commitBatch]]: a committed batchId is a no-op, an
+    * out-of-order one fails fast). Verdicts land in [[DocsTable]]
+    * `(doc_id, source, keep_rank, kept, batch_id)` — every batch doc gets
+    * a row, so the drop decisions are auditable, not just the survivors.
     */
   def processBatch(
       catalog: graft.sink.TranscriptCatalog,
@@ -137,44 +122,28 @@ object IncrementalCap {
       k: Int,
       blockSize: Long = 1L << 40,
       maxTopRows: Long = 4096
-  ): Unit = {
-    // Negative ids would collide with the watermark/base-partition
-    // encoding and batchId <= the empty-store watermark (-1) silently
-    // no-ops (round-7 advice) -- fail fast instead.
-    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val view = StoreCompaction.committedView(catalog, MarkerTable)
-    if (view.contains(batchId)) return
-    if (!view.isEmpty) {
-      require(batchId > view.maxCommitted,
-        s"out-of-order cap batch: batchId=$batchId but batch " +
-          s"${view.maxCommitted} already committed — per-source budgets " +
-          "assume ascending commits, and an out-of-order batch would " +
-          "spend budget its own future has already spent")
+  ): Unit =
+    StoreCompaction.commitBatch(catalog, MarkerTable, batchId, "cap") { view =>
+      val spark = batchDocs.sparkSession
+      // NULL sources are coalesced to a sentinel group rather than dropped:
+      // exclusivePrefixSum attaches offsets by equi-join on the key, which
+      // silently loses null keys — and the audit contract above is that
+      // EVERY batch doc gets a verdict row. The sentinel also keeps the
+      // cross-batch budget for the null group (counts rows join by the same
+      // sentinel value).
+      val ranked = rankInSource(
+        batchDocs.select(col("doc_id"),
+          coalesce(col("source"), lit(NullSourceSentinel)).as("source")),
+        blockSize, maxTopRows)
+      val out = ranked.join(baseCounts(catalog, view, spark), Seq("source"), "left")
+        .select(col("doc_id"), col("source"), col("keep_rank"),
+          (col("keep_rank") + coalesce(col("base"), lit(0L)) < k).as("kept"),
+          lit(batchId).as("batch_id"))
+      catalog.overwritePartitions(out, DocsTable, Seq("batch_id"))
+      val counts = catalog.read(DocsTable)
+        .filter(col("batch_id") === batchId && col("kept"))
+        .groupBy("source").agg(count(lit(1)).as("kept_docs"))
+        .withColumn("batch_id", lit(batchId))
+      catalog.overwritePartitions(counts, CountsTable, Seq("batch_id"))
     }
-    val spark = batchDocs.sparkSession
-    // NULL sources are coalesced to a sentinel group rather than dropped:
-    // exclusivePrefixSum attaches offsets by equi-join on the key, which
-    // silently loses null keys — and the audit contract above is that
-    // EVERY batch doc gets a verdict row. The sentinel also keeps the
-    // cross-batch budget for the null group (counts rows join by the same
-    // sentinel value).
-    val ranked = rankInSource(
-      batchDocs.select(col("doc_id"),
-        coalesce(col("source"), lit(NullSourceSentinel)).as("source")),
-      blockSize, maxTopRows)
-    val out = ranked.join(baseCounts(catalog, view, spark), Seq("source"), "left")
-      .select(col("doc_id"), col("source"), col("keep_rank"),
-        (col("keep_rank") + coalesce(col("base"), lit(0L)) < k).as("kept"),
-        lit(batchId).as("batch_id"))
-    catalog.overwritePartitions(out, DocsTable, Seq("batch_id"))
-    val counts = catalog.read(DocsTable)
-      .filter(col("batch_id") === batchId && col("kept"))
-      .groupBy("source").agg(count(lit(1)).as("kept_docs"))
-      .withColumn("batch_id", lit(batchId))
-    catalog.overwritePartitions(counts, CountsTable, Seq("batch_id"))
-    // COMMIT POINT.
-    catalog.append(
-      spark.range(1).select(lit(batchId).as("batch_id"), lit(1).as("one")),
-      MarkerTable, Seq("batch_id"))
-  }
 }

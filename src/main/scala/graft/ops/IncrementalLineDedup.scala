@@ -23,15 +23,14 @@ import org.apache.spark.sql.functions._
   * `lh` and therefore partial-aggregates WITHOUT an exchange; only
   * (lh, cnt) and (doc_id, line_idx, lh) rows ever shuffle.
   *
-  * Crash semantics (the round-6 exactly-once protocol): scrubbed docs
-  * and the batch's count rows are both batch_id-partitioned and
-  * REPLACED on replay (dynamic partition overwrite for docs; partition
-  * drop + bucketed append for counts — counts must never duplicate,
-  * unlike the harmless signature-store appends, because readers SUM
-  * them), and the commit marker lands last. Historical totals read
-  * COMMITTED batches only, so a crashed batch's half-written counts are
-  * invisible until its replay completes. Batches commit in ascending
-  * batch_id order (enforced fail-fast, the IncrementalPack contract).
+  * Commit and compaction follow [[StoreCompaction]]'s protocol.
+  * Scrubbed docs and the batch's count rows are both batch_id-partitioned
+  * and REPLACED on replay (dynamic partition overwrite for docs;
+  * partition drop + bucketed append for counts — counts must never
+  * duplicate, unlike the harmless signature-store appends, because
+  * readers SUM them). Historical totals read COMMITTED batches only, so
+  * a crashed batch's half-written counts are invisible until its replay
+  * completes.
   */
 object IncrementalLineDedup {
 
@@ -56,52 +55,38 @@ object IncrementalLineDedup {
     catalog.readBucketed(CountsTable)
   }
 
-  /** Committed batch ids (the marker partitions). */
-  def committedBatches(catalog: graft.sink.TranscriptCatalog): Set[Long] =
-    catalog.listPartitionValues(MarkerTable, "batch_id").map(_.toLong).toSet
-
   /** Fold committed batches beyond the `keepRecent` newest into the
-    * watermark base partition (the [[StoreCompaction]] protocol, the
+    * watermark base partition ([[StoreCompaction.compact]], the
     * bucketed-table form): per-unit counts of the folded batches — plus
     * the previous base — are summed into ONE bucketed partition (the
-    * groupBy runs exchange-free on the bucketed read), markers and raw
-    * partitions are GC'd, and the per-batch history predicate stays
-    * bounded forever. Readers SUM count rows, so scrub verdicts are
+    * groupBy runs exchange-free on the bucketed read), so the per-batch
+    * history predicate stays bounded forever. Readers SUM count rows, so scrub verdicts are
     * unchanged by construction (spec-asserted).
     */
   def compact(
       catalog: graft.sink.TranscriptCatalog,
       keepRecent: Int,
       nBuckets: Int = 16
-  ): Unit = {
-    val view = StoreCompaction.committedView(catalog, MarkerTable)
-    StoreCompaction.foldTarget(view, keepRecent).foreach { wNew =>
-      val foldIds = view.recent.filter(_ <= wNew)
-      val foldView = StoreCompaction.CommittedView(view.watermark, foldIds)
-      val basePart = StoreCompaction.basePartition(wNew)
-      val folded = countStore(catalog, nBuckets)
-        .filter(foldView.statePredicate(col("batch_id")))
-        .groupBy("lh").agg(sum("cnt").as("cnt"))
-        .withColumn("batch_id", lit(basePart))
-        .select("lh", "cnt", "batch_id")
-        // the source partitions are deleted below — sever the lineage
-        .localCheckpoint()
-      catalog.dropBucketedPartition(CountsTable, "batch_id", basePart.toString)
-      catalog.appendBucketed(
-        folded, CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
-      // COMMIT POINT.
-      StoreCompaction.writeWatermark(catalog, MarkerTable, wNew)
-      catalog.listPartitionValues(CountsTable, "batch_id")
-        .filter(StoreCompaction.gcStatePartition(wNew))
-        .foreach(v => catalog.dropBucketedPartition(CountsTable, "batch_id", v))
-      catalog.dropPartitions(MarkerTable, "batch_id",
-        StoreCompaction.gcMarkerPartition(wNew))
+  ): Unit =
+    StoreCompaction.compact(catalog, MarkerTable, keepRecent, Some(CountsTable)) {
+      (foldView, wNew) =>
+        val basePart = StoreCompaction.basePartition(wNew)
+        val folded = countStore(catalog, nBuckets)
+          .filter(foldView.statePredicate(col("batch_id")))
+          .groupBy("lh").agg(sum("cnt").as("cnt"))
+          .withColumn("batch_id", lit(basePart))
+          .select("lh", "cnt", "batch_id")
+          // the source partitions are deleted after the commit — sever
+          // the lineage
+          .localCheckpoint()
+        catalog.dropBucketedPartition(CountsTable, "batch_id", basePart.toString)
+        catalog.appendBucketed(
+          folded, CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
     }
-  }
 
   /** Scrub one batch of docs against the committed history and commit
-    * it. Replaying a committed batchId is a no-op; an out-of-order
-    * batchId fails fast. Emits nothing — the scrubbed rows land in
+    * it ([[StoreCompaction.commitBatch]]: a committed batchId is a no-op,
+    * an out-of-order one fails fast). Emits nothing — the scrubbed rows land in
     * [[DocsTable]] `(doc_id, n_lines, kept_line_count, scrub_hash,
     * batch_id)`.
     */
@@ -113,85 +98,68 @@ object IncrementalLineDedup {
       maxOccurrences: Int = 1,
       nBuckets: Int = 16,
       storePreGate: Boolean = true
-  ): Unit = {
-    // Negative ids would collide with the watermark/base-partition
-    // encoding and batchId <= the empty-store watermark (-1) silently
-    // no-ops (round-7 advice) -- fail fast instead.
-    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val view = StoreCompaction.committedView(catalog, MarkerTable)
-    if (view.contains(batchId)) return
-    if (!view.isEmpty) {
-      require(batchId > view.maxCommitted,
-        s"out-of-order line-dedup batch: batchId=$batchId but batch " +
-          s"${view.maxCommitted} already committed — historical totals " +
-          "assume ascending commits, and an out-of-order batch would " +
-          "strip against a history that already contains its future")
+  ): Unit =
+    StoreCompaction.commitBatch(catalog, MarkerTable, batchId, "line-dedup") { view =>
+      // One unit-hash pass feeds the batch counts, the over-threshold
+      // probe, and the per-doc scrub.
+      val units = LineDedup.unitHashes(batchDocs, textCol).persist()
+      val batchCounts = units.groupBy("lh").agg(count(lit(1)).as("cnt"))
+        .localCheckpoint()
+      // Historical totals for COMMITTED batches only (a crashed batch's
+      // half-written rows are invisible); the store reads bucketed by lh,
+      // so this aggregation never exchanges the store side.
+      val store = countStore(catalog, nBuckets)
+      // Watermark-compacted committed predicate: base-partition equality
+      // plus a bounded isin (StoreCompaction), never an all-history In.
+      val histRows = store.filter(view.statePredicate(col("batch_id")))
+      // Store-side Bloom pre-gate (round-6, the INVERSE direction of the
+      // decontam gate): history only matters for units PRESENT IN THIS
+      // BATCH, and the batch's distinct-unit set is the small side here —
+      // so a sketch of batchCounts.lh probes every store row inside the
+      // (bucketed, exchange-free) scan, and history units this batch never
+      // mentions skip the aggregation entirely. At steady state the store
+      // holds every unit ever seen while a day's batch holds a sliver, so
+      // this collapses the per-batch history aggregation from all-of-history
+      // to ~|batch units| (+fpp noise). False positives only aggregate a few
+      // extra units that the left join below then ignores; false negatives
+      // are impossible, so outputs are bit-identical (spec-asserted).
+      // stat.bloomFilter NPEs on a zero-row input (null aggregate buffer),
+      // so a post-first-commit micro-batch with only empty/whitespace texts
+      // (zero line units) must skip the gate — histRows ungated is still
+      // correct, the left join below just finds nothing to match.
+      val nBatchUnits = batchCounts.count()
+      val histGated =
+        if (storePreGate && !view.isEmpty && nBatchUnits > 0) {
+          val sketch = batchCounts.stat.bloomFilter(
+            "lh", math.max(nBatchUnits, 64L), 0.01)
+          histRows.filter(
+            graft.functions.BloomMightContain.mightContain(col("lh"), sketch))
+        } else histRows
+      val hist = histGated.groupBy("lh").agg(sum("cnt").as("hist"))
+      val over = batchCounts.join(hist, Seq("lh"), "left")
+        .filter(col("cnt") + coalesce(col("hist"), lit(0L)) > maxOccurrences)
+        .select("lh")
+      // Per-doc scrub — the LineDedup.scrub tail over the batch's units.
+      val kept = units.join(over, Seq("lh"), "left_anti")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("kept_line_count"),
+          md5(concat_ws(" ", expr(
+            "transform(array_sort(collect_list(struct(line_idx, lh))), s -> s.lh)")))
+            .as("scrub_hash"))
+      val outDocs = units.groupBy("doc_id").agg(count(lit(1)).as("n_lines"))
+        .join(kept, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_lines"),
+          coalesce(col("kept_line_count"), lit(0L)).as("kept_line_count"),
+          coalesce(col("scrub_hash"), md5(lit(""))).as("scrub_hash"),
+          lit(batchId).as("batch_id"))
+      catalog.overwritePartitions(outDocs, DocsTable, Seq("batch_id"))
+      units.unpersist()
+      // Counts REPLACE this batch's partition (drop + bucketed append):
+      // a replayed append would double every total a reader sums.
+      catalog.dropBucketedPartition(CountsTable, "batch_id", batchId.toString)
+      catalog.appendBucketed(
+        batchCounts.withColumn("batch_id", lit(batchId))
+          .select("lh", "cnt", "batch_id"),
+        CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
     }
-    val spark = batchDocs.sparkSession
-    // One unit-hash pass feeds the batch counts, the over-threshold
-    // probe, and the per-doc scrub.
-    val units = LineDedup.unitHashes(batchDocs, textCol).persist()
-    val batchCounts = units.groupBy("lh").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    // Historical totals for COMMITTED batches only (a crashed batch's
-    // half-written rows are invisible); the store reads bucketed by lh,
-    // so this aggregation never exchanges the store side.
-    val store = countStore(catalog, nBuckets)
-    // Watermark-compacted committed predicate: base-partition equality
-    // plus a bounded isin (StoreCompaction), never an all-history In.
-    val histRows = store.filter(view.statePredicate(col("batch_id")))
-    // Store-side Bloom pre-gate (round-6, the INVERSE direction of the
-    // decontam gate): history only matters for units PRESENT IN THIS
-    // BATCH, and the batch's distinct-unit set is the small side here —
-    // so a sketch of batchCounts.lh probes every store row inside the
-    // (bucketed, exchange-free) scan, and history units this batch never
-    // mentions skip the aggregation entirely. At steady state the store
-    // holds every unit ever seen while a day's batch holds a sliver, so
-    // this collapses the per-batch history aggregation from all-of-history
-    // to ~|batch units| (+fpp noise). False positives only aggregate a few
-    // extra units that the left join below then ignores; false negatives
-    // are impossible, so outputs are bit-identical (spec-asserted).
-    // stat.bloomFilter NPEs on a zero-row input (null aggregate buffer),
-    // so a post-first-commit micro-batch with only empty/whitespace texts
-    // (zero line units) must skip the gate — histRows ungated is still
-    // correct, the left join below just finds nothing to match.
-    val nBatchUnits = batchCounts.count()
-    val histGated =
-      if (storePreGate && !view.isEmpty && nBatchUnits > 0) {
-        val sketch = batchCounts.stat.bloomFilter(
-          "lh", math.max(nBatchUnits, 64L), 0.01)
-        histRows.filter(
-          graft.functions.BloomMightContain.mightContain(col("lh"), sketch))
-      } else histRows
-    val hist = histGated.groupBy("lh").agg(sum("cnt").as("hist"))
-    val over = batchCounts.join(hist, Seq("lh"), "left")
-      .filter(col("cnt") + coalesce(col("hist"), lit(0L)) > maxOccurrences)
-      .select("lh")
-    // Per-doc scrub — the LineDedup.scrub tail over the batch's units.
-    val kept = units.join(over, Seq("lh"), "left_anti")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("kept_line_count"),
-        md5(concat_ws(" ", expr(
-          "transform(array_sort(collect_list(struct(line_idx, lh))), s -> s.lh)")))
-          .as("scrub_hash"))
-    val outDocs = units.groupBy("doc_id").agg(count(lit(1)).as("n_lines"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_lines"),
-        coalesce(col("kept_line_count"), lit(0L)).as("kept_line_count"),
-        coalesce(col("scrub_hash"), md5(lit(""))).as("scrub_hash"),
-        lit(batchId).as("batch_id"))
-    catalog.overwritePartitions(outDocs, DocsTable, Seq("batch_id"))
-    units.unpersist()
-    // Counts REPLACE this batch's partition (drop + bucketed append):
-    // a replayed append would double every total a reader sums.
-    catalog.dropBucketedPartition(CountsTable, "batch_id", batchId.toString)
-    catalog.appendBucketed(
-      batchCounts.withColumn("batch_id", lit(batchId))
-        .select("lh", "cnt", "batch_id"),
-      CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
-    // COMMIT POINT.
-    catalog.append(
-      spark.range(1).select(lit(batchId).as("batch_id"), lit(1).as("one")),
-      MarkerTable, Seq("batch_id"))
-  }
 }

@@ -26,12 +26,11 @@ import org.apache.spark.sql.functions._
   * WITHOUT an exchange; only (gh, cnt) and (doc_id, pos, gh) rows ever
   * shuffle, and the span-merge window partitions by doc_id.
   *
-  * Crash semantics (the round-6 exactly-once protocol, identical to
-  * [[IncrementalLineDedup]]): scrubbed docs and the batch's count rows
+  * Commit and compaction follow [[StoreCompaction]]'s protocol, as in
+  * [[IncrementalLineDedup]]: scrubbed docs and the batch's count rows
   * are batch_id-partitioned and REPLACED on replay (counts must never
-  * duplicate — readers SUM them), the commit marker lands last,
-  * historical totals read COMMITTED batches only, and batches commit in
-  * ascending batch_id order (enforced fail-fast).
+  * duplicate — readers SUM them), and historical totals read COMMITTED
+  * batches only.
   */
 object IncrementalSubstringDedup {
 
@@ -56,46 +55,35 @@ object IncrementalSubstringDedup {
     catalog.readBucketed(CountsTable)
   }
 
-  /** Committed batch ids (the marker partitions). */
-  def committedBatches(catalog: graft.sink.TranscriptCatalog): Set[Long] =
-    catalog.listPartitionValues(MarkerTable, "batch_id").map(_.toLong).toSet
-
   /** Fold committed batches beyond the `keepRecent` newest into the
-    * watermark base partition — identical protocol and rationale as
-    * [[IncrementalLineDedup.compact]], over the gram-count store.
+    * watermark base partition ([[StoreCompaction.compact]]) — the
+    * same fold as [[IncrementalLineDedup.compact]], over the gram-count
+    * store.
     */
   def compact(
       catalog: graft.sink.TranscriptCatalog,
       keepRecent: Int,
       nBuckets: Int = 16
-  ): Unit = {
-    val view = StoreCompaction.committedView(catalog, MarkerTable)
-    StoreCompaction.foldTarget(view, keepRecent).foreach { wNew =>
-      val foldIds = view.recent.filter(_ <= wNew)
-      val foldView = StoreCompaction.CommittedView(view.watermark, foldIds)
-      val basePart = StoreCompaction.basePartition(wNew)
-      val folded = countStore(catalog, nBuckets)
-        .filter(foldView.statePredicate(col("batch_id")))
-        .groupBy("gh").agg(sum("cnt").as("cnt"))
-        .withColumn("batch_id", lit(basePart))
-        .select("gh", "cnt", "batch_id")
-        .localCheckpoint()
-      catalog.dropBucketedPartition(CountsTable, "batch_id", basePart.toString)
-      catalog.appendBucketed(
-        folded, CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
-      // COMMIT POINT.
-      StoreCompaction.writeWatermark(catalog, MarkerTable, wNew)
-      catalog.listPartitionValues(CountsTable, "batch_id")
-        .filter(StoreCompaction.gcStatePartition(wNew))
-        .foreach(v => catalog.dropBucketedPartition(CountsTable, "batch_id", v))
-      catalog.dropPartitions(MarkerTable, "batch_id",
-        StoreCompaction.gcMarkerPartition(wNew))
+  ): Unit =
+    StoreCompaction.compact(catalog, MarkerTable, keepRecent, Some(CountsTable)) {
+      (foldView, wNew) =>
+        val basePart = StoreCompaction.basePartition(wNew)
+        val folded = countStore(catalog, nBuckets)
+          .filter(foldView.statePredicate(col("batch_id")))
+          .groupBy("gh").agg(sum("cnt").as("cnt"))
+          .withColumn("batch_id", lit(basePart))
+          .select("gh", "cnt", "batch_id")
+          // the source partitions are deleted after the commit — sever
+          // the lineage
+          .localCheckpoint()
+        catalog.dropBucketedPartition(CountsTable, "batch_id", basePart.toString)
+        catalog.appendBucketed(
+          folded, CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
     }
-  }
 
   /** Scrub one batch of docs against the committed gram history and
-    * commit it. Replaying a committed batchId is a no-op; an
-    * out-of-order batchId fails fast. The scrubbed rows land in
+    * commit it ([[StoreCompaction.commitBatch]]: a committed batchId is
+    * a no-op, an out-of-order one fails fast). The scrubbed rows land in
     * [[DocsTable]] `(doc_id, n_tokens, kept_tokens, scrub_hash,
     * batch_id)`.
     */
@@ -108,70 +96,53 @@ object IncrementalSubstringDedup {
       minOccurrences: Int = 2,
       nBuckets: Int = 16,
       storePreGate: Boolean = true
-  ): Unit = {
-    // Negative ids would collide with the watermark/base-partition
-    // encoding and batchId <= the empty-store watermark (-1) silently
-    // no-ops (round-7 advice) -- fail fast instead.
-    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val view = StoreCompaction.committedView(catalog, MarkerTable)
-    if (view.contains(batchId)) return
-    if (!view.isEmpty) {
-      require(batchId > view.maxCommitted,
-        s"out-of-order substring-dedup batch: batchId=$batchId but batch " +
-          s"${view.maxCommitted} already committed — historical totals " +
-          "assume ascending commits, and an out-of-order batch would " +
-          "strip against a history that already contains its future")
+  ): Unit =
+    StoreCompaction.commitBatch(catalog, MarkerTable, batchId, "substring-dedup") { view =>
+      // One positioned-gram pass feeds the batch counts, the duplicated
+      // set, and the position semi-join.
+      val grams = SubstringDedup.positionedGrams(batchDocs, textCol, k).persist()
+      val batchCounts = grams.groupBy("gh").agg(count(lit(1)).as("cnt"))
+        .localCheckpoint()
+      // Historical totals for COMMITTED batches only; the store reads
+      // bucketed by gh, so this aggregation never exchanges the store side.
+      val store = countStore(catalog, nBuckets)
+      // Watermark-compacted committed predicate: base-partition equality
+      // plus a bounded isin (StoreCompaction), never an all-history In.
+      val histRows = store.filter(view.statePredicate(col("batch_id")))
+      // Store-side Bloom pre-gate — same rationale as
+      // [[IncrementalLineDedup.processBatch]]: history counts only matter
+      // for grams present in THIS batch, so a sketch of the batch's
+      // distinct grams probes the store scan and all other history rows
+      // skip the aggregation. False positives are ignored by the left join
+      // below; false negatives are impossible — outputs are bit-identical
+      // (spec-asserted).
+      // stat.bloomFilter NPEs on a zero-row input (null aggregate buffer),
+      // so a post-first-commit batch whose docs are all shorter than k
+      // grams must skip the gate (histRows ungated is still correct — the
+      // left join below just finds no batch grams to match).
+      val nBatchGrams = batchCounts.count()
+      val histGated =
+        if (storePreGate && !view.isEmpty && nBatchGrams > 0) {
+          val sketch = batchCounts.stat.bloomFilter(
+            "gh", math.max(nBatchGrams, 64L), 0.01)
+          histRows.filter(
+            graft.functions.BloomMightContain.mightContain(col("gh"), sketch))
+        } else histRows
+      val hist = histGated.groupBy("gh").agg(sum("cnt").as("hist"))
+      val dup = batchCounts.join(hist, Seq("gh"), "left")
+        .filter(col("cnt") + coalesce(col("hist"), lit(0L)) >= minOccurrences)
+        .select("gh")
+      val hits = grams.join(dup, Seq("gh"), "left_semi").select("doc_id", "pos")
+      val spanRows = SubstringDedup.spansFromHits(hits, k)
+      val outDocs = SubstringDedup.scrubFromSpans(batchDocs, spanRows, textCol)
+        .withColumn("batch_id", lit(batchId))
+      catalog.overwritePartitions(outDocs, DocsTable, Seq("batch_id"))
+      grams.unpersist()
+      // Counts REPLACE this batch's partition (drop + bucketed append).
+      catalog.dropBucketedPartition(CountsTable, "batch_id", batchId.toString)
+      catalog.appendBucketed(
+        batchCounts.withColumn("batch_id", lit(batchId))
+          .select("gh", "cnt", "batch_id"),
+        CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
     }
-    val spark = batchDocs.sparkSession
-    // One positioned-gram pass feeds the batch counts, the duplicated
-    // set, and the position semi-join.
-    val grams = SubstringDedup.positionedGrams(batchDocs, textCol, k).persist()
-    val batchCounts = grams.groupBy("gh").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    // Historical totals for COMMITTED batches only; the store reads
-    // bucketed by gh, so this aggregation never exchanges the store side.
-    val store = countStore(catalog, nBuckets)
-    // Watermark-compacted committed predicate: base-partition equality
-    // plus a bounded isin (StoreCompaction), never an all-history In.
-    val histRows = store.filter(view.statePredicate(col("batch_id")))
-    // Store-side Bloom pre-gate — same rationale as
-    // [[IncrementalLineDedup.processBatch]]: history counts only matter
-    // for grams present in THIS batch, so a sketch of the batch's
-    // distinct grams probes the store scan and all other history rows
-    // skip the aggregation. False positives are ignored by the left join
-    // below; false negatives are impossible — outputs are bit-identical
-    // (spec-asserted).
-    // stat.bloomFilter NPEs on a zero-row input (null aggregate buffer),
-    // so a post-first-commit batch whose docs are all shorter than k
-    // grams must skip the gate (histRows ungated is still correct — the
-    // left join below just finds no batch grams to match).
-    val nBatchGrams = batchCounts.count()
-    val histGated =
-      if (storePreGate && !view.isEmpty && nBatchGrams > 0) {
-        val sketch = batchCounts.stat.bloomFilter(
-          "gh", math.max(nBatchGrams, 64L), 0.01)
-        histRows.filter(
-          graft.functions.BloomMightContain.mightContain(col("gh"), sketch))
-      } else histRows
-    val hist = histGated.groupBy("gh").agg(sum("cnt").as("hist"))
-    val dup = batchCounts.join(hist, Seq("gh"), "left")
-      .filter(col("cnt") + coalesce(col("hist"), lit(0L)) >= minOccurrences)
-      .select("gh")
-    val hits = grams.join(dup, Seq("gh"), "left_semi").select("doc_id", "pos")
-    val spanRows = SubstringDedup.spansFromHits(hits, k)
-    val outDocs = SubstringDedup.scrubFromSpans(batchDocs, spanRows, textCol)
-      .withColumn("batch_id", lit(batchId))
-    catalog.overwritePartitions(outDocs, DocsTable, Seq("batch_id"))
-    grams.unpersist()
-    // Counts REPLACE this batch's partition (drop + bucketed append).
-    catalog.dropBucketedPartition(CountsTable, "batch_id", batchId.toString)
-    catalog.appendBucketed(
-      batchCounts.withColumn("batch_id", lit(batchId))
-        .select("gh", "cnt", "batch_id"),
-      CountsTable, CountsBucketCols, nBuckets, CountsPartitionCols)
-    // COMMIT POINT.
-    catalog.append(
-      spark.range(1).select(lit(batchId).as("batch_id"), lit(1).as("one")),
-      MarkerTable, Seq("batch_id"))
-  }
 }

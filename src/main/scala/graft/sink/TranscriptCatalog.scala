@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * temp-file + atomic rename
   * (reference: internal/shared/filestorages/file_storage.go:113-150).
   */
-final class TranscriptCatalog(val root: String, spark: SparkSession) {
+final class TranscriptCatalog(val root: String, val spark: SparkSession) {
 
   private def path(table: String): String = s"$root/$table"
 

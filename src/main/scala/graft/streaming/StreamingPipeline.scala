@@ -126,56 +126,21 @@ object StreamingPipeline {
       }
   }
 
-  /** Streaming incremental near-duplicate dedup — the corpus-ingest twin
-    * of `graft.ops.IncrementalDedup`. Per micro-batch: (1) replay guard —
-    * a batch_id already committed means a foreachBatch retry, skip it
-    * (the reference's committed-batch idempotency,
-    * log_batch_store.go:42-59); (2) drop docs that near-duplicate any
-    * previously KEPT doc via the catalog-persisted BUCKETED band-signature
-    * store (store side of the semi-join reads exchange-free, see
-    * `IncrementalDedup.signatureStore`); (3) resolve within-batch
-    * near-dups TRANSITIVELY — the batch's candidate pairs run through
-    * connected components and only each cluster's min-id representative is
-    * kept, the exact `dd_cluster_resolve` contract (the pre-round-4 greedy
-    * drop under-kept chains: for pairs {1,5},{2,5} it kept both 1 and 2);
-    * (4) append survivors to `docs_kept`, their signatures to the store,
-    * then the batch's COMMIT MARKER.
-    *
-    * The cross-batch "state" is deliberately a TABLE, not a streaming
-    * state store: a corpus signature store grows O(corpus × bands) and
-    * outlives any executor state backend, while the per-batch cost stays
-    * one ids-only semi-join against it.
-    *
-    * Replay guard cost (round-3 advice): committed batch ids are partition
-    * DIRECTORIES of the tiny `batches` marker table, so the guard is one
-    * filesystem metadata listing — never a scan of the O(corpus × bands)
-    * store.
-    *
-    * Crash semantics: writes run docs_kept → signatures → marker, and the
-    * marker is the commit point. `docs_kept` is partitioned by batch_id
-    * and written with dynamic partition OVERWRITE, so the doc output is
-    * exactly-once like the state: a replay after the docs_kept write
-    * recomputes the identical kept set (the store is unchanged) and
-    * REPLACES the batch's partition byte-for-byte; a replay after the
-    * signatures append finds the batch's own signatures in the store,
-    * keeps nothing, and an empty dynamic overwrite touches NO partition —
-    * the committed docs stay intact. No crash window can duplicate or
-    * lose a doc row (round-5 verdict item #1; StreamingSpec covers both
-    * windows).
+  /** The one foreachBatch stream sink: runs `process(batch, batchId)` on
+    * each micro-batch under `checkpoint`, drained with AvailableNow. Every
+    * incremental store's batch function plugs in here — for example
+    * `batchSink(docs, cp)((b, id) => processNeardupBatch(b, id, root, 2, 1))`
+    * — and gets exactly-once output from its own commit protocol
+    * ([[graft.ops.StoreCompaction.commitBatch]]): foreachBatch retries a
+    * batch under the same id, which the store's replay guard turns into a
+    * no-op, and its ascending ids satisfy the ordering contract.
     */
-  def neardupSink(
-      docs: DataFrame, // streaming (doc_id: long, text: string)
-      catalogRoot: String,
-      checkpoint: String,
-      bands: Int = 2,
-      rows: Int = 1,
-      maxBucket: Option[Int] = None
-  ): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processNeardupBatch(batch, batchId, catalogRoot, bands, rows,
-          maxBucket = maxBucket)
-      }
+  def batchSink(
+      stream: DataFrame,
+      checkpoint: String
+  )(process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .foreachBatch(process)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
 
@@ -208,17 +173,10 @@ object StreamingPipeline {
       spark: SparkSession,
       catalogRoot: String,
       keepRecent: Int
-  ): Unit = {
-    import graft.ops.StoreCompaction
-    val catalog = new graft.sink.TranscriptCatalog(catalogRoot, spark)
-    val view = StoreCompaction.committedView(catalog, NeardupMarkerTable)
-    StoreCompaction.foldTarget(view, keepRecent).foreach { wNew =>
-      // COMMIT POINT — markers at or below the watermark become implicit.
-      StoreCompaction.writeWatermark(catalog, NeardupMarkerTable, wNew)
-      catalog.dropPartitions(NeardupMarkerTable, "batch_id",
-        StoreCompaction.gcMarkerPartition(wNew))
-    }
-  }
+  ): Unit =
+    graft.ops.StoreCompaction.compact(
+      new graft.sink.TranscriptCatalog(catalogRoot, spark),
+      NeardupMarkerTable, keepRecent, None)((_, _) => ())
 
   /** One-time migration of a store written by the pre-round-4 sink
     * (plain un-bucketed signature files; committed batch ids as marker
@@ -313,8 +271,43 @@ object StreamingPipeline {
     catalog.append(
       spark.range(1).select(lit(2).as("format_version")), StoreFormatMarker)
 
-  /** One micro-batch of `neardupSink` (public so the replay guard and
-    * crash-ordering semantics are directly testable).
+  /** Streaming incremental near-duplicate dedup — the corpus-ingest twin
+    * of `graft.ops.IncrementalDedup`, run per micro-batch under
+    * [[batchSink]] and committed through
+    * [[graft.ops.StoreCompaction.commitBatch]]: (1) admit guard — a
+    * batch_id already committed means a foreachBatch retry, skip it;
+    * (2) drop docs that near-duplicate any previously KEPT doc via the
+    * catalog-persisted BUCKETED band-signature store (store side of the
+    * semi-join reads exchange-free, see
+    * `IncrementalDedup.signatureStore`); (3) resolve within-batch
+    * near-dups TRANSITIVELY — the batch's candidate pairs run through
+    * connected components and only each cluster's min-id representative is
+    * kept, the exact `dd_cluster_resolve` contract (the pre-round-4 greedy
+    * drop under-kept chains: for pairs {1,5},{2,5} it kept both 1 and 2);
+    * (4) append survivors to `docs_kept`, their signatures to the store,
+    * then the batch's COMMIT MARKER.
+    *
+    * The cross-batch "state" is deliberately a TABLE, not a streaming
+    * state store: a corpus signature store grows O(corpus × bands) and
+    * outlives any executor state backend, while the per-batch cost stays
+    * one ids-only semi-join against it.
+    *
+    * Replay guard cost (round-3 advice): committed batch ids are partition
+    * DIRECTORIES of the tiny `batches` marker table, so the guard is one
+    * filesystem metadata listing — never a scan of the O(corpus × bands)
+    * store.
+    *
+    * Crash semantics: writes run docs_kept → signatures → marker, and the
+    * marker is the commit point. `docs_kept` is partitioned by batch_id
+    * and written with dynamic partition OVERWRITE, so the doc output is
+    * exactly-once like the state: a replay after the docs_kept write
+    * recomputes the identical kept set (the store is unchanged) and
+    * REPLACES the batch's partition byte-for-byte; a replay after the
+    * signatures append finds the batch's own signatures in the store,
+    * keeps nothing, and an empty dynamic overwrite touches NO partition —
+    * the committed docs stay intact. No crash window can duplicate or
+    * lose a doc row (round-5 verdict item #1; StreamingSpec covers both
+    * windows).
     */
   def processNeardupBatch(
       batch: DataFrame,
@@ -328,72 +321,64 @@ object StreamingPipeline {
   ): Unit = {
     import graft.ops.{ConnectedComponents, IncrementalDedup, MinHash}
     import graft.sink.TranscriptCatalog
-    // Negative ids would collide with the watermark/base-partition
-    // encoding (round-7 advice) — fail fast instead of silently no-op'ing.
-    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val spark = batch.sparkSession
     val catalog = new TranscriptCatalog(catalogRoot, spark)
+    // Migration back-fills legacy batch markers, so it precedes the
+    // replay guard.
     migrateLegacyNeardupStore(spark, catalogRoot, storeBuckets)
-    // Watermark-folded replay guard (round-7 verdict item #2): one blob
-    // read + a BOUNDED marker listing, whatever the store's age.
-    if (graft.ops.StoreCompaction.committedView(catalog, NeardupMarkerTable)
-          .contains(batchId)) return
-    // shingles is column-preserving, so text rides along for the kept sink
-    val tok = IncrementalDedup.shingles(batch, "text")
-    // The store join EXCLUDES this batch's own id: a crash between a
-    // PARTIAL signature append and the marker would otherwise make the
-    // replay match docs against their own half-landed signatures and
-    // silently drop them from docs_kept (the dynamic overwrite then
-    // REPLACES the partition with the shrunken set). With the exclusion
-    // a replay sees exactly the store the first attempt saw, so every
-    // crash window converges to the original kept set. The re-append of
-    // the replay's signatures duplicates rows within this batch id only —
-    // harmless for a semi-join, and every read from here on excludes or
-    // tolerates them the same way.
-    val store = IncrementalDedup.signatureStore(catalog, storeBuckets)
-      .filter(col("batch_id") =!= lit(batchId))
-    // The ROLLING store sketch (round-6): a persisted Bloom superset of
-    // the store's keys pre-gates the semi-join, so a steady-state
-    // micro-batch probes a ~MB-sized sketch instead of shuffling all its
-    // signature rows — and the sketch is maintained INCREMENTALLY (one
-    // merge per batch, saved BEFORE the signature append so it can never
-    // under-cover the store; a crash leaves harmless extra keys). Output
-    // is identical to the ungated path (IncrementalDedupSpec,
-    // StreamingSpec gated ≡ ungated).
-    val sketchState =
-      if (storePreGate) Some(IncrementalDedup.rollingSketch(catalog, storeBuckets))
-      else None
-    val (kept0, _, keptSigs0) = IncrementalDedup.dedupBatch(
-      tok, store, "doc_id", "toks", bands, rows,
-      sketch = sketchState.map(_._1))
-    // maxBucket = the hot-bucket guard for the within-batch banding
-    // (round-4 verdict item #4): an adversarial near-constant batch puts
-    // every doc in one bucket and the self-join quadratic-blows; the cap
-    // drops such buckets (logged), trading recall for survival — the
-    // nightly-ingest default, OFF only where exact oracles require it.
-    val pairs = MinHash.candidatePairs(
-      kept0.select("doc_id", "toks"), "doc_id", "toks", bands, rows,
-      maxBucket = maxBucket)
-    val dropWithin = ConnectedComponents.resolve(pairs, "id_a", "id_b")
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("doc_id"))
-    val kept = kept0.join(dropWithin, Seq("doc_id"), "left_anti")
-    val keptSigs = keptSigs0.join(dropWithin, Seq("doc_id"), "left_anti")
-    catalog.overwritePartitions(
-      kept.select(col("doc_id"), col("text"), lit(batchId).as("batch_id")),
-      "docs_kept", Seq("batch_id"))
-    // Sketch merge MUST precede the signature append (superset invariant).
-    sketchState.foreach { case (sketch, cap, items) =>
-      IncrementalDedup.mergeRollingSketch(
-        catalog, keptSigs, sketch, cap, items, storeBuckets)
+    graft.ops.StoreCompaction.commitBatch(
+        catalog, NeardupMarkerTable, batchId, "neardup") { _ =>
+      // shingles is column-preserving, so text rides along for the kept sink
+      val tok = IncrementalDedup.shingles(batch, "text")
+      // The store join EXCLUDES this batch's own id: a crash between a
+      // PARTIAL signature append and the marker would otherwise make the
+      // replay match docs against their own half-landed signatures and
+      // silently drop them from docs_kept (the dynamic overwrite then
+      // REPLACES the partition with the shrunken set). With the exclusion
+      // a replay sees exactly the store the first attempt saw, so every
+      // crash window converges to the original kept set. The re-append of
+      // the replay's signatures duplicates rows within this batch id only —
+      // harmless for a semi-join, and every read from here on excludes or
+      // tolerates them the same way.
+      val store = IncrementalDedup.signatureStore(catalog, storeBuckets)
+        .filter(col("batch_id") =!= lit(batchId))
+      // The ROLLING store sketch (round-6): a persisted Bloom superset of
+      // the store's keys pre-gates the semi-join, so a steady-state
+      // micro-batch probes a ~MB-sized sketch instead of shuffling all its
+      // signature rows — and the sketch is maintained INCREMENTALLY (one
+      // merge per batch, saved BEFORE the signature append so it can never
+      // under-cover the store; a crash leaves harmless extra keys). Output
+      // is identical to the ungated path (IncrementalDedupSpec,
+      // StreamingSpec gated ≡ ungated).
+      val sketchState =
+        if (storePreGate) Some(IncrementalDedup.rollingSketch(catalog, storeBuckets))
+        else None
+      val (kept0, _, keptSigs0) = IncrementalDedup.dedupBatch(
+        tok, store, "doc_id", "toks", bands, rows,
+        sketch = sketchState.map(_._1))
+      // maxBucket = the hot-bucket guard for the within-batch banding
+      // (round-4 verdict item #4): an adversarial near-constant batch puts
+      // every doc in one bucket and the self-join quadratic-blows; the cap
+      // drops such buckets (logged), trading recall for survival — the
+      // nightly-ingest default, OFF only where exact oracles require it.
+      val pairs = MinHash.candidatePairs(
+        kept0.select("doc_id", "toks"), "doc_id", "toks", bands, rows,
+        maxBucket = maxBucket)
+      val dropWithin = ConnectedComponents.resolve(pairs, "id_a", "id_b")
+        .filter(col("id") =!= col("label"))
+        .select(col("id").as("doc_id"))
+      val kept = kept0.join(dropWithin, Seq("doc_id"), "left_anti")
+      val keptSigs = keptSigs0.join(dropWithin, Seq("doc_id"), "left_anti")
+      catalog.overwritePartitions(
+        kept.select(col("doc_id"), col("text"), lit(batchId).as("batch_id")),
+        "docs_kept", Seq("batch_id"))
+      // Sketch merge MUST precede the signature append (superset invariant).
+      sketchState.foreach { case (sketch, cap, items) =>
+        IncrementalDedup.mergeRollingSketch(
+          catalog, keptSigs, sketch, cap, items, storeBuckets)
+      }
+      IncrementalDedup.appendSignatures(catalog, keptSigs, batchId, storeBuckets)
     }
-    IncrementalDedup.appendSignatures(catalog, keptSigs, batchId, storeBuckets)
-    // COMMIT POINT — the marker registers the batch id as a partition
-    // directory (one row of payload; a partition column cannot be the only
-    // column in a parquet write).
-    catalog.append(
-      spark.range(1).select(lit(batchId).as("batch_id"), lit(1).as("one")),
-      "batches", Seq("batch_id"))
   }
 
   /** Streaming twin of the corpus pipeline's QUALITY GATE (round-4 verdict
@@ -431,8 +416,9 @@ object StreamingPipeline {
     (kept, metrics)
   }
 
-  /** The STREAMING EXPORT SINK — corpus_export's release pipeline running
-    * incrementally per micro-batch, composed from the same primitives:
+  /** The STREAMING EXPORT — corpus_export's release pipeline running
+    * incrementally per micro-batch (under [[batchSink]]), composed from
+    * the same primitives:
     * quality gate (shared qualityCol) → exact dedup within the batch →
     * cross-batch near-dup drop via the bucketed signature store →
     * transitive within-batch resolution (CC, hot-bucket cap available) →
@@ -451,7 +437,8 @@ object StreamingPipeline {
     *     packing (the batch must carry a `source` column) — budgets are
     *     enforced ACROSS micro-batches by the cap's count store.
     *
-    * Crash ordering (the marker is the commit point, as everywhere):
+    * Crash ordering ([[graft.ops.StoreCompaction.commitBatch]]: the
+    * `export_batches` marker is the commit point):
     * [semantic store (self-committing)] → [cap store (self-committing)]
     * → docs_export → INCREMENTAL PACK (self-committing) → signatures →
     * export marker. Every self-committing sub-store MUST
@@ -494,225 +481,100 @@ object StreamingPipeline {
     // shared signature store must be migrated/validated BEFORE ensureBucketed
     // can bless a legacy un-bucketed layout and silently miss duplicates.
     migrateLegacyNeardupStore(spark, catalogRoot, storeBuckets)
-    if (catalog.listPartitionValues("export_batches", "batch_id")
-          .contains(batchId.toString)) return
-    val q = batch.withColumn("__quality", graft.OpsQueries.qualityCol)
-      .filter(col("__quality") >= minQuality)
-      .drop("__quality")
-    val exactKeep = q.groupBy(md5(col("text")).as("__h"))
-      .agg(min("doc_id").as("doc_id")).select("doc_id")
-    val tok = IncrementalDedup.shingles(
-      q.join(exactKeep, Seq("doc_id"), "left_semi"), "text")
-    // Own-batch exclusion: same partial-append crash rationale as
-    // processNeardupBatch — a replay must see the store the first
-    // attempt saw, never its own half-landed signatures.
-    val store = IncrementalDedup.signatureStore(catalog, storeBuckets)
-      .filter(col("batch_id") =!= lit(batchId))
-    // Rolling store sketch pre-gate, same invariant as processNeardupBatch
-    // (merged BELOW, before the signature append).
-    val (sigSketch, sigCap, sigItems) =
-      IncrementalDedup.rollingSketch(catalog, storeBuckets)
-    val (kept0, _, keptSigs0) = IncrementalDedup.dedupBatch(
-      tok, store, "doc_id", "toks", bands, rows, sketch = Some(sigSketch))
-    val pairs = MinHash.candidatePairs(
-      kept0.select("doc_id", "toks"), "doc_id", "toks", bands, rows,
-      maxBucket = maxBucket)
-    val dropWithin = ConnectedComponents.resolve(pairs, "id_a", "id_b")
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("doc_id"))
-    val lexDeduped = kept0.join(dropWithin, Seq("doc_id"), "left_anti")
-    // Optional SEMANTIC near-dup stage: the lexical survivors' embeddings
-    // run through the self-committing IncrementalSemDedup store (its
-    // replay is a no-op and the kept set is re-READ, so a crash replay of
-    // this batch reproduces the same survivors).
-    val deduped =
-      if (!semDedup) lexDeduped
-      else {
-        require(batch.columns.contains("embedding"),
-          "semDedup export stage needs an `embedding` column in the batch")
-        graft.ops.IncrementalSemDedup.processBatch(catalog,
-          batch.select(col("doc_id").as("vec_id"), col("embedding"))
-            .join(lexDeduped.select(col("doc_id").as("vec_id")),
-              Seq("vec_id"), "left_semi"),
-          batchId, semMinCos, storeBuckets)
-        val semKept = catalog.read(graft.ops.IncrementalSemDedup.KeptTable)
-          .filter(col("batch_id") === batchId)
-          .select(col("vec_id").as("doc_id"))
-        lexDeduped.join(semKept, Seq("doc_id"), "left_semi")
+    graft.ops.StoreCompaction.commitBatch(
+        catalog, "export_batches", batchId, "export") { _ =>
+      val q = batch.withColumn("__quality", graft.OpsQueries.qualityCol)
+        .filter(col("__quality") >= minQuality)
+        .drop("__quality")
+      val exactKeep = q.groupBy(md5(col("text")).as("__h"))
+        .agg(min("doc_id").as("doc_id")).select("doc_id")
+      val tok = IncrementalDedup.shingles(
+        q.join(exactKeep, Seq("doc_id"), "left_semi"), "text")
+      // Own-batch exclusion: same partial-append crash rationale as
+      // processNeardupBatch — a replay must see the store the first
+      // attempt saw, never its own half-landed signatures.
+      val store = IncrementalDedup.signatureStore(catalog, storeBuckets)
+        .filter(col("batch_id") =!= lit(batchId))
+      // Rolling store sketch pre-gate, same invariant as processNeardupBatch
+      // (merged BELOW, before the signature append).
+      val (sigSketch, sigCap, sigItems) =
+        IncrementalDedup.rollingSketch(catalog, storeBuckets)
+      val (kept0, _, keptSigs0) = IncrementalDedup.dedupBatch(
+        tok, store, "doc_id", "toks", bands, rows, sketch = Some(sigSketch))
+      val pairs = MinHash.candidatePairs(
+        kept0.select("doc_id", "toks"), "doc_id", "toks", bands, rows,
+        maxBucket = maxBucket)
+      val dropWithin = ConnectedComponents.resolve(pairs, "id_a", "id_b")
+        .filter(col("id") =!= col("label"))
+        .select(col("id").as("doc_id"))
+      val lexDeduped = kept0.join(dropWithin, Seq("doc_id"), "left_anti")
+      // Optional SEMANTIC near-dup stage: the lexical survivors' embeddings
+      // run through the self-committing IncrementalSemDedup store (its
+      // replay is a no-op and the kept set is re-READ, so a crash replay of
+      // this batch reproduces the same survivors).
+      val deduped =
+        if (!semDedup) lexDeduped
+        else {
+          require(batch.columns.contains("embedding"),
+            "semDedup export stage needs an `embedding` column in the batch")
+          graft.ops.IncrementalSemDedup.processBatch(catalog,
+            batch.select(col("doc_id").as("vec_id"), col("embedding"))
+              .join(lexDeduped.select(col("doc_id").as("vec_id")),
+                Seq("vec_id"), "left_semi"),
+            batchId, semMinCos, storeBuckets)
+          val semKept = catalog.read(graft.ops.IncrementalSemDedup.KeptTable)
+            .filter(col("batch_id") === batchId)
+            .select(col("vec_id").as("doc_id"))
+          lexDeduped.join(semKept, Seq("doc_id"), "left_semi")
+        }
+      // The gate runs Bloom-pre-gated (round-6): the persisted sketch is one
+      // blob read per micro-batch (rebuilt only when the eval manifest
+      // changes), and definite-miss grams never reach the exchange — the
+      // exact semi-join over the survivors keeps the result identical to
+      // the ungated gate (DecontamSpec).
+      val contaminated = Decontam.contaminatedIdsBloom(
+        deduped, Decontam.evalGramStore(catalog, storeBuckets),
+        Decontam.loadOrBuildGramBloom(catalog, storeBuckets))
+      val clean0 = graft.ops.Materialize.stable(
+        deduped.join(contaminated, Seq("doc_id"), "left_anti")
+          .select("doc_id", "text"), reliable = false)
+      // Optional PER-SOURCE CAP stage: survivors spend cross-batch budget
+      // in the self-committing IncrementalCap store; only its kept verdicts
+      // enter the release (budgets hold ACROSS micro-batches). Capped-out
+      // docs spend no budget and leave no signature — a later near-dup of
+      // one competes fresh, exactly like the batch form.
+      val clean = capK match {
+        case None => clean0
+        case Some(k) =>
+          require(batch.columns.contains("source"),
+            "capK export stage needs a `source` column in the batch")
+          graft.ops.IncrementalCap.processBatch(catalog,
+            batch.select("doc_id", "source")
+              .join(clean0.select("doc_id"), Seq("doc_id"), "left_semi"),
+            batchId, k)
+          val capKept = catalog.read(graft.ops.IncrementalCap.DocsTable)
+            .filter(col("batch_id") === batchId && col("kept"))
+            .select("doc_id")
+          graft.ops.Materialize.stable(
+            clean0.join(capKept, Seq("doc_id"), "left_semi"), reliable = false)
       }
-    // The gate runs Bloom-pre-gated (round-6): the persisted sketch is one
-    // blob read per micro-batch (rebuilt only when the eval manifest
-    // changes), and definite-miss grams never reach the exchange — the
-    // exact semi-join over the survivors keeps the result identical to
-    // the ungated gate (DecontamSpec).
-    val contaminated = Decontam.contaminatedIdsBloom(
-      deduped, Decontam.evalGramStore(catalog, storeBuckets),
-      Decontam.loadOrBuildGramBloom(catalog, storeBuckets))
-    val clean0 = graft.ops.Materialize.stable(
-      deduped.join(contaminated, Seq("doc_id"), "left_anti")
-        .select("doc_id", "text"), reliable = false)
-    // Optional PER-SOURCE CAP stage: survivors spend cross-batch budget
-    // in the self-committing IncrementalCap store; only its kept verdicts
-    // enter the release (budgets hold ACROSS micro-batches). Capped-out
-    // docs spend no budget and leave no signature — a later near-dup of
-    // one competes fresh, exactly like the batch form.
-    val clean = capK match {
-      case None => clean0
-      case Some(k) =>
-        require(batch.columns.contains("source"),
-          "capK export stage needs a `source` column in the batch")
-        graft.ops.IncrementalCap.processBatch(catalog,
-          batch.select("doc_id", "source")
-            .join(clean0.select("doc_id"), Seq("doc_id"), "left_semi"),
-          batchId, k)
-        val capKept = catalog.read(graft.ops.IncrementalCap.DocsTable)
-          .filter(col("batch_id") === batchId && col("kept"))
-          .select("doc_id")
-        graft.ops.Materialize.stable(
-          clean0.join(capKept, Seq("doc_id"), "left_semi"), reliable = false)
+      catalog.overwritePartitions(
+        clean.withColumn("batch_id", lit(batchId)), "docs_export", Seq("batch_id"))
+      val tokensCol =
+        if (tokenCounter == "bpe")
+          graft.functions.BpeTokens.bpeTokenCount(col("text"))
+        else size(split(lower(col("text")), " "))
+      IncrementalPack.processBatch(catalog,
+        clean.select(col("doc_id"), tokensCol.as("tokens")),
+        batchId, budget, packBlockSize)
+      val keptSigs = keptSigs0
+        .join(clean.select("doc_id"), Seq("doc_id"), "left_semi")
+      // Sketch merge MUST precede the signature append (superset invariant).
+      IncrementalDedup.mergeRollingSketch(
+        catalog, keptSigs, sigSketch, sigCap, sigItems, storeBuckets)
+      IncrementalDedup.appendSignatures(catalog, keptSigs, batchId, storeBuckets)
     }
-    catalog.overwritePartitions(
-      clean.withColumn("batch_id", lit(batchId)), "docs_export", Seq("batch_id"))
-    val tokensCol =
-      if (tokenCounter == "bpe")
-        graft.functions.BpeTokens.bpeTokenCount(col("text"))
-      else size(split(lower(col("text")), " "))
-    IncrementalPack.processBatch(catalog,
-      clean.select(col("doc_id"), tokensCol.as("tokens")),
-      batchId, budget, packBlockSize)
-    val keptSigs = keptSigs0
-      .join(clean.select("doc_id"), Seq("doc_id"), "left_semi")
-    // Sketch merge MUST precede the signature append (superset invariant).
-    IncrementalDedup.mergeRollingSketch(
-      catalog, keptSigs, sigSketch, sigCap, sigItems, storeBuckets)
-    IncrementalDedup.appendSignatures(catalog, keptSigs, batchId, storeBuckets)
-    // COMMIT POINT
-    catalog.append(
-      spark.range(1).select(lit(batchId).as("batch_id"), lit(1).as("one")),
-      "export_batches", Seq("batch_id"))
   }
-
-  /** Streaming semantic dedup — `graft.ops.IncrementalSemDedup` under
-    * foreachBatch: each micro-batch of raw embeddings `(vec_id,
-    * embedding)` is dropped against the bucketed kept-vector store
-    * (within-IVF-cell cosine), resolved transitively within itself, and
-    * its survivors committed exactly-once (batch_id-partitioned overwrite
-    * + store append + marker). The index must be published
-    * (`IncrementalSemDedup.publishIndex`) before the stream starts.
-    */
-  def semdedupSink(
-      vectors: DataFrame, // streaming (vec_id: long, embedding: array<float>)
-      catalogRoot: String,
-      checkpoint: String,
-      minCos: Double = 0.95,
-      storeBuckets: Int = 16
-  ): DataStreamWriter[Row] =
-    vectors.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.IncrementalSemDedup.processBatch(
-          new graft.sink.TranscriptCatalog(catalogRoot, batch.sparkSession),
-          batch, batchId, minCos, storeBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-
-  /** Streaming line-level dedup — `graft.ops.IncrementalLineDedup`
-    * under foreachBatch: each micro-batch of docs `(doc_id, text)` is
-    * scrubbed against the bucketed historical unit-count store (the
-    * C4-style boilerplate strip in its streaming execution form,
-    * completing the full-rebuild / incremental-batch / streaming trio
-    * the near-dup and packing operators already have). Exactly-once via
-    * the store's own protocol: batch_id-partitioned replace for docs
-    * AND counts, marker last, foreachBatch's ascending batch ids
-    * satisfying the fail-fast ordering contract.
-    */
-  def lineDedupSink(
-      docs: DataFrame, // streaming (doc_id: long, text: string)
-      catalogRoot: String,
-      checkpoint: String,
-      maxOccurrences: Int = 1,
-      storeBuckets: Int = 16
-  ): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.IncrementalLineDedup.processBatch(
-          new graft.sink.TranscriptCatalog(catalogRoot, batch.sparkSession),
-          batch, batchId, maxOccurrences = maxOccurrences,
-          nBuckets = storeBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-
-  /** Streaming substring dedup — `graft.ops.IncrementalSubstringDedup`
-    * under foreachBatch: each micro-batch of docs `(doc_id, text)` has
-    * its verbatim repeated spans (vs history AND within the batch) cut
-    * against the bucketed historical k-gram count store. Same
-    * exactly-once protocol as [[lineDedupSink]].
-    */
-  def substringDedupSink(
-      docs: DataFrame, // streaming (doc_id: long, text: string)
-      catalogRoot: String,
-      checkpoint: String,
-      k: Int = graft.ops.SubstringDedup.DefaultK,
-      minOccurrences: Int = 2,
-      storeBuckets: Int = 16
-  ): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.IncrementalSubstringDedup.processBatch(
-          new graft.sink.TranscriptCatalog(catalogRoot, batch.sparkSession),
-          batch, batchId, k = k, minOccurrences = minOccurrences,
-          nBuckets = storeBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-
-  /** Streaming per-source frequency cap — `graft.ops.IncrementalCap`
-    * under foreachBatch: each micro-batch of docs `(doc_id, source)`
-    * spends per-source budget against the committed kept-count store;
-    * at most k docs per source are ever marked kept across the stream.
-    * Same exactly-once protocol as [[lineDedupSink]] (batch_id-replaced
-    * verdicts and counts, marker last).
-    */
-  def capSink(
-      docs: DataFrame, // streaming (doc_id: long, source: string)
-      catalogRoot: String,
-      checkpoint: String,
-      k: Int
-  ): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.IncrementalCap.processBatch(
-          new graft.sink.TranscriptCatalog(catalogRoot, batch.sparkSession),
-          batch, batchId, k)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-
-  /** `processExportBatch` as a foreachBatch stream sink. `capK` /
-    * `semDedup` switch on the optional per-source cap and semantic-dedup
-    * stages (the stream must then carry `source` / `embedding` columns).
-    */
-  def exportSink(
-      docs: DataFrame,
-      catalogRoot: String,
-      checkpoint: String,
-      budget: Int = 512,
-      maxBucket: Option[Int] = None,
-      capK: Option[Int] = None,
-      semDedup: Boolean = false,
-      semMinCos: Double = 0.95,
-      tokenCounter: String = "whitespace"
-  ): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processExportBatch(batch, batchId, catalogRoot,
-          budget = budget, maxBucket = maxBucket,
-          capK = capK, semDedup = semDedup, semMinCos = semMinCos,
-          tokenCounter = tokenCounter)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
 
   /** Write the routed stream to per-route parquet sinks (K1/K2 analog):
     * one query, partitioned by route, exactly-once via checkpointed commits.

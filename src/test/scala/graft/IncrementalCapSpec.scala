@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.IncrementalCap
+import graft.ops.{IncrementalCap, StoreCompaction}
 import graft.sink.TranscriptCatalog
 
 /** Cross-batch per-source capping (graft.ops.IncrementalCap): per-source
@@ -110,7 +110,8 @@ class IncrementalCapSpec extends SparkSpecBase {
     IncrementalCap.processBatch(catalog, docsDf(Seq(1L -> "A")), 0L, 3)
     val before = verdicts(catalog)
     IncrementalCap.processBatch(catalog, docsDf(Seq.empty), 1L, 3)
-    IncrementalCap.committedBatches(catalog) shouldBe Set(0L, 1L)
+    StoreCompaction.committedView(catalog, IncrementalCap.MarkerTable) shouldBe
+      StoreCompaction.CommittedView(-1L, Set(0L, 1L))
     verdicts(catalog) shouldBe before
     IncrementalCap.processBatch(catalog, docsDf(Seq(10L -> "A")), 2L, 3)
     verdicts(catalog)(10L)._3 shouldBe true

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{IncrementalLineDedup, LineDedup}
+import graft.ops.{IncrementalLineDedup, LineDedup, StoreCompaction}
 import graft.sink.TranscriptCatalog
 
 /** Cross-batch line dedup (graft.ops.IncrementalLineDedup): a single
@@ -80,7 +80,8 @@ class IncrementalLineDedupSpec extends SparkSpecBase {
     // crash-before-marker: drop batch 1's marker (docs + counts remain
     // on disk exactly as a crash in that window leaves them), replay
     catalog.dropPartitions(IncrementalLineDedup.MarkerTable, "batch_id", _ == "1")
-    IncrementalLineDedup.committedBatches(catalog) shouldBe Set(0L)
+    StoreCompaction.committedView(catalog, IncrementalLineDedup.MarkerTable) shouldBe
+      StoreCompaction.CommittedView(-1L, Set(0L))
     IncrementalLineDedup.processBatch(catalog, docsDf(b1), 1L)
     docsOf(catalog) shouldBe docsBefore
     val countsAfter = IncrementalLineDedup.countStore(catalog)
@@ -147,7 +148,8 @@ class IncrementalLineDedupSpec extends SparkSpecBase {
       docsDf(Seq(1L -> s"alpha beta gamma\n$boiler")), 0L)
     val before = docsOf(catalog)
     IncrementalLineDedup.processBatch(catalog, docsDf(Seq.empty), 1L)
-    IncrementalLineDedup.committedBatches(catalog) shouldBe Set(0L, 1L)
+    StoreCompaction.committedView(catalog, IncrementalLineDedup.MarkerTable) shouldBe
+      StoreCompaction.CommittedView(-1L, Set(0L, 1L))
     docsOf(catalog) shouldBe before
     // and the stream continues normally afterwards
     IncrementalLineDedup.processBatch(catalog,

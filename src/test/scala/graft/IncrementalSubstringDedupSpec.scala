@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{IncrementalSubstringDedup, SubstringDedup}
+import graft.ops.{IncrementalSubstringDedup, StoreCompaction, SubstringDedup}
 import graft.sink.TranscriptCatalog
 
 /** Cross-batch substring dedup (graft.ops.IncrementalSubstringDedup): a
@@ -85,7 +85,8 @@ class IncrementalSubstringDedupSpec extends SparkSpecBase {
     // crash-before-marker: drop batch 1's marker (docs + counts remain on
     // disk exactly as a crash in that window leaves them), then replay
     catalog.dropPartitions(IncrementalSubstringDedup.MarkerTable, "batch_id", _ == "1")
-    IncrementalSubstringDedup.committedBatches(catalog) shouldBe Set(0L)
+    StoreCompaction.committedView(catalog, IncrementalSubstringDedup.MarkerTable) shouldBe
+      StoreCompaction.CommittedView(-1L, Set(0L))
     IncrementalSubstringDedup.processBatch(catalog, docsDf(b1), 1L)
     docsOf(catalog) shouldBe docsBefore
     counts() shouldBe countsBefore
@@ -165,7 +166,8 @@ class IncrementalSubstringDedupSpec extends SparkSpecBase {
     val before = docsOf(catalog)
     IncrementalSubstringDedup.processBatch(catalog,
       docsDf(Seq(10L -> "tiny doc", 11L -> "three short words")), 1L)
-    IncrementalSubstringDedup.committedBatches(catalog) shouldBe Set(0L, 1L)
+    StoreCompaction.committedView(catalog, IncrementalSubstringDedup.MarkerTable) shouldBe
+      StoreCompaction.CommittedView(-1L, Set(0L, 1L))
     val after = docsOf(catalog)
     after(1L) shouldBe before(1L)
     after(10L) shouldBe ((2, 2, after(10L)._3)) // kept whole

@@ -494,5 +494,87 @@ class StoreCompactionSpec extends SparkSpecBase {
       graft.streaming.StreamingPipeline.processNeardupBatch(
         Seq((1L, "t")).toDF("doc_id", "text"), -1L, tmpDir("neg-nd"), 2, 1)
     }.getMessage should include(">= 0")
+    intercept[IllegalArgumentException] {
+      graft.ops.IncrementalSemDedup.processBatch(catalog, semVectors(0, 2), -1L)
+    }.getMessage should include(">= 0")
+    intercept[IllegalArgumentException] {
+      IncrementalSubstringDedup.processBatch(catalog, lineDocs(Seq(1L -> "x")), -1L)
+    }.getMessage should include(">= 0")
+    // export: the guard runs before any table is written
+    val exportRoot = tmpDir("neg-export")
+    intercept[IllegalArgumentException] {
+      graft.streaming.StreamingPipeline.processExportBatch(
+        Seq((1L, exportWords("n"))).toDF("doc_id", "text"), -1L, exportRoot)
+    }.getMessage should include(">= 0")
+    new TranscriptCatalog(exportRoot, spark)
+      .listPartitionValues("docs_export", "batch_id") should not contain "-1"
+  }
+
+  test("a late batch below the watermark fails fast") {
+    import graft.ops.{IncrementalSemDedup, Similarity}
+    import graft.streaming.StreamingPipeline
+    // commit 0, 3, 4 and fold to watermark 3: 1 and 2 were never committed
+    val sem = new TranscriptCatalog(tmpDir("late-sem"), spark)
+    IncrementalSemDedup.publishIndex(sem, Similarity.prepare(semVectors(0, 12)), nCells = 4)
+    Seq(0L, 3L, 4L).foreach { b =>
+      IncrementalSemDedup.processBatch(sem, semVectors(b * 100, 4), b, storeBuckets = 4)
+    }
+    IncrementalSemDedup.compact(sem, keepRecent = 1)
+    StoreCompaction.readWatermark(sem, IncrementalSemDedup.MarkerTable) shouldBe 3L
+    intercept[IllegalArgumentException] {
+      IncrementalSemDedup.processBatch(sem, semVectors(200, 4), 2L, storeBuckets = 4)
+    }.getMessage should include("out-of-order")
+    // a folded committed batch is still a no-op replay
+    val nKept = sem.read(IncrementalSemDedup.KeptTable).count()
+    IncrementalSemDedup.processBatch(sem, semVectors(900, 4), 0L, storeBuckets = 4)
+    sem.read(IncrementalSemDedup.KeptTable).count() shouldBe nKept
+
+    val root = tmpDir("late-nd")
+    def doc(id: Long) = Seq((id, s"unique words for doc $id here")).toDF("doc_id", "text")
+    Seq(0L, 3L, 4L).foreach { b =>
+      StreamingPipeline.processNeardupBatch(doc(b), b, root, bands = 2, rows = 1)
+    }
+    StreamingPipeline.compactNeardupMarkers(spark, root, keepRecent = 1)
+    intercept[IllegalArgumentException] {
+      StreamingPipeline.processNeardupBatch(doc(2L), 2L, root, bands = 2, rows = 1)
+    }.getMessage should include("out-of-order")
+
+    val cap = new TranscriptCatalog(tmpDir("late-cap"), spark)
+    Seq(0L, 3L, 4L).foreach { b =>
+      IncrementalCap.processBatch(cap, capDocs(Seq(b -> "A")), b, 4)
+    }
+    IncrementalCap.compact(cap, keepRecent = 1)
+    intercept[IllegalArgumentException] {
+      IncrementalCap.processBatch(cap, capDocs(Seq(1L -> "A")), 1L, 4)
+    }.getMessage should include("out-of-order")
+    val before = capVerdicts(cap)
+    IncrementalCap.processBatch(cap, capDocs(Seq(99L -> "A")), 3L, 4)
+    capVerdicts(cap) shouldBe before
+  }
+
+  test("the commit protocol lives in StoreCompaction, foreachBatch in batchSink") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    def src(f: java.nio.file.Path) =
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    files.map(_.getFileName.toString) should contain("StoreCompaction.scala")
+    val protocol = Seq("writeWatermark(", "foldTarget(", "gcMarkerPartition(")
+    val handRolled = files
+      .filterNot(_.getFileName.toString == "StoreCompaction.scala")
+      .filter(f => protocol.exists(src(f).contains))
+    withClue("compact through StoreCompaction.compact: ") {
+      handRolled shouldBe empty
+    }
+    // the def enclosing each .foreachBatch call
+    val defName = """def\s+(\w+)""".r
+    val sinks = files.flatMap { f =>
+      val s = src(f)
+      """\.foreachBatch\b""".r.findAllMatchIn(s)
+        .map(m => defName.findAllMatchIn(s.substring(0, m.start)).toList.last.group(1))
+    }
+    withClue("stream sinks go through StreamingPipeline.batchSink: ") {
+      sinks shouldBe List("batchSink")
+    }
   }
 }

@@ -106,8 +106,9 @@ class StreamingSpec extends SparkSpecBase {
     val out = tmpDir("stream-neardup")
     val cp = tmpDir("stream-neardup-cp")
     def run(): Unit = {
-      val q = StreamingPipeline.neardupSink(
-        mem.toDF().toDF("doc_id", "text"), out, cp).start()
+      val q = StreamingPipeline.batchSink(mem.toDF().toDF("doc_id", "text"), cp) {
+        (b, id) => StreamingPipeline.processNeardupBatch(b, id, out, 2, 1)
+      }.start()
       try q.processAllAvailable() finally q.stop()
     }
     // batch 1: two fresh docs
@@ -530,8 +531,10 @@ class StreamingSpec extends SparkSpecBase {
     val out = tmpDir("stream-cap")
     val cp = tmpDir("stream-cap-cp")
     def run(): Unit = {
-      val q = StreamingPipeline.capSink(
-        mem.toDF().toDF("doc_id", "source"), out, cp, k = 3).start()
+      val q = StreamingPipeline.batchSink(mem.toDF().toDF("doc_id", "source"), cp) {
+        (b, id) => graft.ops.IncrementalCap.processBatch(
+          new graft.sink.TranscriptCatalog(out, b.sparkSession), b, id, k = 3)
+      }.start()
       try q.processAllAvailable() finally q.stop()
     }
     mem.addData(1L -> "A", 2L -> "A", 3L -> "B")
@@ -554,8 +557,10 @@ class StreamingSpec extends SparkSpecBase {
     val out = tmpDir("stream-linededup")
     val cp = tmpDir("stream-linededup-cp")
     def run(): Unit = {
-      val q = StreamingPipeline.lineDedupSink(
-        mem.toDF().toDF("doc_id", "text"), out, cp).start()
+      val q = StreamingPipeline.batchSink(mem.toDF().toDF("doc_id", "text"), cp) {
+        (b, id) => graft.ops.IncrementalLineDedup.processBatch(
+          new graft.sink.TranscriptCatalog(out, b.sparkSession), b, id)
+      }.start()
       try q.processAllAvailable() finally q.stop()
     }
     val boiler = "subscribe to our newsletter"
@@ -591,8 +596,10 @@ class StreamingSpec extends SparkSpecBase {
     val out = tmpDir("stream-subdedup")
     val cp = tmpDir("stream-subdedup-cp")
     def run(): Unit = {
-      val q = StreamingPipeline.substringDedupSink(
-        mem.toDF().toDF("doc_id", "text"), out, cp).start()
+      val q = StreamingPipeline.batchSink(mem.toDF().toDF("doc_id", "text"), cp) {
+        (b, id) => graft.ops.IncrementalSubstringDedup.processBatch(
+          new graft.sink.TranscriptCatalog(out, b.sparkSession), b, id)
+      }.start()
       try q.processAllAvailable() finally q.stop()
     }
     val boiler = "please subscribe to our newsletter for more updates today"
