@@ -992,14 +992,7 @@ object OpsQueries {
 
     // --- ANN1: brute-force cosine top-k against a fixed query vector ---
     "ann_topk_bruteforce" -> ((s: SparkSession, dir: String) => {
-      val e = emb(s, dir).select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-        .withColumn("cos_sim",
-          dot("v", "qv") / (sqrt(dot("v", "v")) * sqrt(dot("qv", "qv"))))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(10)
+      Similarity.bruteForceTopK(Similarity.prepare(emb(s, dir)), 0, 10)
         .select(col("vec_id"), round(col("cos_sim"), 6).as("cos_sim"))
     }),
 
@@ -2003,7 +1996,7 @@ object OpsQueries {
           |  coalesce(k.kept_line_count, 0) AS kept_line_count,
           |  coalesce(k.scrub_hash, md5('')) AS scrub_hash
           |FROM tot t LEFT JOIN kept k ON t.doc_id = k.doc_id""".stripMargin.replace("\n", " "),
-      // Unit arrays mirror LineDedup.unitArraySql exactly: newline split,
+      // Unit arrays mirror LineDedup.unitHashes exactly: newline split,
       // 8-word segments, one unit minimum per line; idx base differs
       // (0- vs 1-based) but only the ORDER reaches the scrub hash.
       "dd_line_dedup" ->

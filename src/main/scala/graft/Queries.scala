@@ -90,20 +90,17 @@ object Queries {
 
     // --- X1 skew: explicit two-stage salted aggregation ---
     "q_salted_agg" -> ((s: SparkSession, dir: String) => {
-      t(s, dir, "events")
-        .withColumn("salt", pmod(hash(col("event_id")), lit(8)))
-        .groupBy("user_id", "salt").agg(count(lit(1)).as("pc"))
-        .groupBy("user_id").agg(sum("pc").as("cnt"))
+      Rollup.saltedCounts(t(s, dir, "events"), Seq("user_id"), col("event_id"), 8)
     }),
 
     // --- A5: incremental partial-merge (union of partials → final) ---
     "q_incremental_merge" -> ((s: SparkSession, dir: String) => {
       val events = t(s, dir, "events")
       val p1 = events.filter(pmod(col("event_id"), lit(2)) === 0)
-        .groupBy("user_id").agg(count(lit(1)).as("pc"))
+        .groupBy("user_id").agg(count(lit(1)).as("cnt"))
       val p2 = events.filter(pmod(col("event_id"), lit(2)) === 1)
-        .groupBy("user_id").agg(count(lit(1)).as("pc"))
-      p1.unionByName(p2).groupBy("user_id").agg(sum("pc").as("cnt"))
+        .groupBy("user_id").agg(count(lit(1)).as("cnt"))
+      Rollup.mergePartials(p1, p2, Seq("user_id"))
     }),
 
     // --- W2: window-key formatting ---
@@ -184,9 +181,7 @@ object Queries {
     //     salted rollup — this is the shape that survives a hot key whose
     //     distinct set doesn't fit one executor). ---
     "q_twostage_distinct" -> ((s: SparkSession, dir: String) => {
-      t(s, dir, "events")
-        .select("event_type", "user_id").distinct()
-        .groupBy("event_type").agg(count(lit(1)).as("n_users"))
+      Rollup.distinctCounts(t(s, dir, "events"), Seq("event_type"), "user_id", "n_users")
     }),
 
     // --- O2: per-group top-k (rank window + filter) ---

@@ -41,37 +41,22 @@ object Rollup {
     case other    => throw new IllegalArgumentException(s"invalid window size: $other")
   }
 
-  /** Per-(window, conv_id, dims...) counts with explicit two-stage salting.
-    *
-    * Returns one row per (window_start, conv_id, dims..., cnt). The salt is
-    * derived from a high-cardinality column (turn_idx) so a single hot
-    * (window, conv) key fans out over `saltBuckets` stage-1 reducers.
+  /** Two-stage salted counts per `keys`: stage 1 groups by (keys, salt)
+    * so a hot key's rows spread over `saltBuckets` reducers, stage 2 sums
+    * the (at most saltBuckets) sub-counts per key. Returns (keys..., cnt).
+    * The salt is the hash of `saltSource`, a high-cardinality column.
     */
   def saltedCounts(
       df: DataFrame,
-      dims: Seq[String],
-      windowSize: String = "minute",
-      saltBuckets: Int = 16,
-      saltSource: Column = col("turn_idx")
-  ): DataFrame = {
-    val keys = Seq("window_start", "conv_id") ++ dims
-    df.withColumn("window_start", windowStart(col("ts"), windowSize))
-      .withColumn("salt", pmod(hash(saltSource), lit(saltBuckets)))
+      keys: Seq[String],
+      saltSource: Column,
+      saltBuckets: Int
+  ): DataFrame =
+    df.withColumn("salt", pmod(hash(saltSource), lit(saltBuckets)))
       .groupBy((keys :+ "salt").map(col): _*)
       .agg(count(lit(1)).as("partial_cnt"))
       .groupBy(keys.map(col): _*)
       .agg(sum("partial_cnt").as("cnt"))
-  }
-
-  /** Unsalted variant (lets Catalyst's partial/final split do the work) —
-    * used where the key already contains high-cardinality components.
-    */
-  def counts(df: DataFrame, dims: Seq[String], windowSize: String = "minute"): DataFrame = {
-    val keys = Seq("window_start", "conv_id") ++ dims
-    df.withColumn("window_start", windowStart(col("ts"), windowSize))
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-  }
 
   /** Exploded relational aggregate: one row per (conv, window, dim, key, cnt),
     * for dim ∈ {tool, role} — the columnar-friendly layout of the reference's
@@ -95,12 +80,8 @@ object Rollup {
         }: _*)).as("dk"))
       .select(col("conv_id"), col("window_start"), col("turn_idx"),
         col("dk.dim").as("dim"), col("dk.key").as("key"))
-    withDims
-      .withColumn("salt", pmod(hash(col("turn_idx")), lit(saltBuckets)))
-      .groupBy("conv_id", "window_start", "dim", "key", "salt")
-      .agg(count(lit(1)).as("partial_cnt"))
-      .groupBy("conv_id", "window_start", "dim", "key")
-      .agg(sum("partial_cnt").as("cnt"))
+    saltedCounts(withDims, Seq("conv_id", "window_start", "dim", "key"),
+        col("turn_idx"), saltBuckets)
       .withColumn("window_size", lit(windowSize))
   }
 
@@ -121,37 +102,29 @@ object Rollup {
       .agg(pivoted.head, pivoted.tail: _*)
   }
 
-  /** Scalable exact distinct-count per key: pre-distinct on (keys, value)
-    * spreads the value space across the cluster before counting — the
-    * distinct analog of the salted rollup. `countDistinct` would pull every
-    * distinct value of a hot key into one reducer's hash set; this shape
-    * never materializes a per-key value set anywhere.
+  /** Scalable exact distinct-count of `valueCol` per `keys`, named `as`:
+    * pre-distinct on (keys, value) spreads the value space across the
+    * cluster before counting — the distinct analog of the salted rollup.
+    * `countDistinct` would pull every distinct value of a hot key into one
+    * reducer's hash set; this shape never materializes a per-key value set
+    * anywhere.
     */
-  def distinctCounts(
-      df: DataFrame,
-      valueCol: String,
-      dims: Seq[String] = Nil,
-      windowSize: String = "minute"
-  ): DataFrame = {
-    val keys = Seq("window_start", "conv_id") ++ dims
-    df.withColumn("window_start", windowStart(col("ts"), windowSize))
-      .select((keys :+ valueCol).map(col): _*)
+  def distinctCounts(df: DataFrame, keys: Seq[String], valueCol: String, as: String): DataFrame =
+    df.select((keys :+ valueCol).map(col): _*)
       .distinct()
       .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as(s"n_distinct_$valueCol"))
-  }
+      .agg(count(lit(1)).as(as))
 
   /** A5 incremental merge: existing aggregate rows ∪ new partial rows →
-    * re-aggregate. Both inputs in exploded layout
-    * (conv_id, window_start, window_size, dim, key, cnt). The merge is the
+    * re-aggregate. Both inputs carry (keys..., cnt). The merge is the
     * commutative-monoid pointwise sum the reference proves in
     * aggregate_rolluper_test.go:104-161.
     */
-  def mergePartials(existing: DataFrame, partials: DataFrame): DataFrame = {
-    val cols = Seq("conv_id", "window_start", "window_size", "dim", "key", "cnt")
-    existing.select(cols.map(col): _*)
-      .unionByName(partials.select(cols.map(col): _*))
-      .groupBy("conv_id", "window_start", "window_size", "dim", "key")
+  def mergePartials(existing: DataFrame, partials: DataFrame, keys: Seq[String]): DataFrame = {
+    val cols = (keys :+ "cnt").map(col)
+    existing.select(cols: _*)
+      .unionByName(partials.select(cols: _*))
+      .groupBy(keys.map(col): _*)
       .agg(sum("cnt").as("cnt"))
   }
 

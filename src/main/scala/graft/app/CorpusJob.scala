@@ -161,12 +161,9 @@ object CorpusJob {
         // inside the scan stage keeps definite-miss grams off the
         // exchange, and the exact semi-join removes the sketch's false
         // positives — identical output, ~fpp of the shuffle volume.
-        val sketch = Decontam.gramBloom(evalGrams)
-        val contaminated = Decontam.gramHashes(train, "text")
-          .join(kept, Seq("doc_id"), "left_semi")
-          .filter(graft.functions.BloomMightContain.mightContain(col("gh"), sketch))
-          .join(evalGrams, Seq("gh"), "left_semi")
-          .select("doc_id").distinct()
+        val contaminated = Decontam.contaminatedIdsBloom(
+          train.join(kept, Seq("doc_id"), "left_semi"), evalGrams,
+          Decontam.gramBloom(evalGrams))
         kept.join(contaminated, Seq("doc_id"), "left_anti")
       case None => kept
     }
@@ -245,23 +242,34 @@ object CorpusJob {
   */
 object CorpusMain {
 
-  private val KnownFlags = Set(
+  private[graft] val KnownFlags = Set(
     "--input", "--out", "--eval", "--quality-min", "--budgets",
     "--budget-default", "--pack-budget", "--bands", "--rows", "--master",
     "--scrub", "--rep-policy", "--token-counter")
 
   def main(args: Array[String]): Unit = {
-    // Strict parsing (round-6 review): a release entry point must REJECT
-    // a misspelled flag or a flag whose value was forgotten — silently
-    // running with defaults ships a wrong release.
-    require(args.length % 2 == 0,
-      s"dangling argument '${args.last}': every flag takes exactly one value")
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    val unknown = opts.keySet -- KnownFlags
-    require(unknown.isEmpty,
-      s"unknown flag(s) ${unknown.mkString(", ")}; known: ${KnownFlags.toSeq.sorted.mkString(", ")}")
+    val opts = Flags.parse(args, KnownFlags)
     val input = opts.getOrElse("--input", sys.error("--input <docs parquet> is required"))
     val out = opts.getOrElse("--out", sys.error("--out <catalog root> is required"))
+    val budgets = opts.get("--budgets").map(_.split(",").map { kv =>
+      kv.split("=") match {
+        case Array(l, b) if b.toLongOption.isDefined => l -> b.toLong
+        case _ => throw new IllegalArgumentException(
+          s"--budgets: expected lang=N[,lang=N...], got '$kv'")
+      }
+    }.toMap).getOrElse(Map.empty[String, Long])
+    val cfg = CorpusConfig(
+      qualityMin = opts.double("--quality-min").getOrElse(0.4),
+      minhashBands = opts.int("--bands").getOrElse(8),
+      minhashRows = opts.int("--rows").getOrElse(4),
+      budgets = budgets,
+      budgetDefault = opts.long("--budget-default").getOrElse(Long.MaxValue / 2),
+      packBudget = opts.int("--pack-budget").getOrElse(512),
+      scrubLines = opts.get("--scrub").exists(_.split(",").contains("lines")),
+      scrubSpans = opts.get("--scrub").exists(_.split(",").contains("spans")),
+      repPolicy = opts.getOrElse("--rep-policy", "minlabel"),
+      tokenCounter = opts.getOrElse("--token-counter", "whitespace"))
+
     val builder = SparkSession.builder()
       .appName("graft-corpus-release")
       .config("spark.sql.session.timeZone", "UTC")
@@ -278,22 +286,6 @@ object CorpusMain {
       builder.config("spark.local.dir", "/dev/shm/graft-spark-local")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    val budgets = opts.get("--budgets").map(_.split(",").map { kv =>
-      val Array(l, b) = kv.split("="); l -> b.toLong
-    }.toMap).getOrElse(Map.empty[String, Long])
-    val cfg = CorpusConfig(
-      qualityMin = opts.getOrElse("--quality-min", "0.4").toDouble,
-      minhashBands = opts.getOrElse("--bands", "8").toInt,
-      minhashRows = opts.getOrElse("--rows", "4").toInt,
-      budgets = budgets,
-      budgetDefault = opts.get("--budget-default").map(_.toLong)
-        .getOrElse(Long.MaxValue / 2),
-      packBudget = opts.getOrElse("--pack-budget", "512").toInt,
-      scrubLines = opts.get("--scrub").exists(_.split(",").contains("lines")),
-      scrubSpans = opts.get("--scrub").exists(_.split(",").contains("spans")),
-      repPolicy = opts.getOrElse("--rep-policy", "minlabel"),
-      tokenCounter = opts.getOrElse("--token-counter", "whitespace"))
 
     val t0 = System.nanoTime()
     val result = CorpusJob.run(spark,

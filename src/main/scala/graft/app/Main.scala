@@ -9,18 +9,26 @@ import graft.model.PipelineConfig
   * Usage (also runnable via `sbt "runMain graft.app.Main ..."`):
   *   graft.app.Main --input <parquet dir | gen:N> --out <catalog root>
   *     [--run-id ID] [--window minute|hour] [--salt N] [--master local[N]]
+  *     [--rows-per-minute N] [--dedup on|off] [--write-input N]
   *
   * `--input gen:N` generates an N-turn deterministic transcript in-flight
   * (pure Catalyst expressions — distributed, no driver loop).
   */
 object Main {
+
+  private[graft] val KnownFlags = Set(
+    "--input", "--out", "--run-id", "--window", "--salt", "--master",
+    "--rows-per-minute", "--write-input", "--dedup")
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts = Flags.parse(args, KnownFlags)
     val input = opts.getOrElse("--input", "gen:100000")
     val out = opts.getOrElse("--out", sys.error("--out <catalog root> is required"))
     val runId = opts.getOrElse("--run-id", s"run-${System.currentTimeMillis()}")
     val window = opts.getOrElse("--window", "minute")
-    val salt = opts.getOrElse("--salt", "16").toInt
+    val salt = opts.int("--salt").getOrElse(16)
+    val rowsPerMinute = opts.long("--rows-per-minute").getOrElse(1000L)
+    val writeInput = opts.long("--write-input")
     val masterOpt = opts.get("--master")
 
     val builder = SparkSession.builder()
@@ -44,11 +52,10 @@ object Main {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val rowsPerMinute = opts.getOrElse("--rows-per-minute", "1000").toLong
     // --write-input: materialize the generated transcript as parquet and exit
     // (bench prep: both scaling runs then read identical bytes).
-    opts.get("--write-input").foreach { genSpec =>
-      TranscriptGen.generate(spark, genSpec.toLong,
+    writeInput.foreach { nTurns =>
+      TranscriptGen.generate(spark, nTurns,
           spark.sparkContext.defaultParallelism * 4, rowsPerMinute)
         .write.mode("overwrite").parquet(out)
       spark.stop()

@@ -193,27 +193,6 @@ object BpeTokens {
     total
   }
 
-  /** The literal serialized-string fold — the exact computation the
-    * DuckDB oracle runs (one non-overlapping `replace` pass per merge
-    * over the per-token-wrapped `~tok~~tok~` form; see the object doc
-    * for why that equals the token-level sweep). Reference
-    * implementation for BpeTokensSpec's equality property; NOT the
-    * production path.
-    */
-  def countTokensViaReplace(text: String): Int = {
-    val norm = normalize(text)
-    val sb = new StringBuilder
-    norm.foreach(c => sb.append(Sep).append(c).append(Sep))
-    var s = sb.toString
-    Merges.foreach { case (a, b) =>
-      s = s.replace(Sep + a + Sep + Sep + b + Sep, Sep + a + b + Sep)
-    }
-    // every token is wrapped in exactly two separators
-    val tokensAll = (s.length - s.replace(Sep, "").length) / 2
-    val spaces = norm.length - norm.replace(" ", "").length
-    tokensAll - spaces
-  }
-
   /** Column API over the native expression. */
   def bpeTokenCount(c: Column): Column =
     org.apache.spark.sql.GraftBridge.column(

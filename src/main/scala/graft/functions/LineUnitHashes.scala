@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * spaces and md5'd; every line yields max(1, ceil(nw/U)) units (an
   * empty line is one md5("") unit — split of "" is [""]). Lines array
   * NULL → NULL; null LINE elements cannot come out of split and are
-  * treated as empty lines. LineUnitHashesSpec asserts bit-equality
+  * treated as empty lines. WordGramHashesSpec asserts bit-equality
   * against the HOF form including codegen/interpreted parity; the full
   * oracle pass re-verified.
   */

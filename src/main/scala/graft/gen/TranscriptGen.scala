@@ -91,10 +91,4 @@ object TranscriptGen {
       tool.as("tool"),
       ts.as("ts"))
   }
-
-  /** Write a generated transcript as a multi-file parquet directory so
-    * downstream reads can parallelize (SURVEY.md §7.4 risk 5).
-    */
-  def writeParquet(spark: SparkSession, nTurns: Long, path: String, numPartitions: Int = 32): Unit =
-    generate(spark, nTurns, numPartitions).write.mode("overwrite").parquet(path)
 }

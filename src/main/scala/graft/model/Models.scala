@@ -62,7 +62,6 @@ final case class PipelineConfig(
     windowSize: String = "minute", // "minute" | "hour"
     saltBuckets: Int = 16,
     maxTextLen: Int = 8192,
-    maxToolLen: Int = 256,
     shufflePartitions: Int = 32,
     // Row-level dedup costs one full-data shuffle; disable when the source
     // guarantees uniqueness (replay protection still holds at window
@@ -83,50 +82,4 @@ final case class PipelineConfig(
   require(maxTextLen > 0, "maxTextLen must be positive")
   require(shufflePartitions > 0, "shufflePartitions must be positive")
   require(maxLineageWindows > 0, "maxLineageWindows must be positive")
-}
-
-/** File-based config load with field-addressed validation errors
-  * (reference analog: internal/shared/configs/load_config.go:13-42 — read
-  * file, unmarshal, validate each field, report readable `field: problem`
-  * messages). Format: `key = value` lines, `#` comments; unknown keys are
-  * rejected rather than silently ignored.
-  */
-object PipelineConfig {
-  private val keys = Set(
-    "windowSize", "saltBuckets", "maxTextLen", "maxToolLen",
-    "shufflePartitions", "dedup", "maxLineageWindows")
-
-  def fromFile(path: String): PipelineConfig = {
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
-      .asScala.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-    val kv = lines.map { l =>
-      l.split("=", 2) match {
-        case Array(k, v) => k.trim -> v.trim
-        case _ => throw new IllegalArgumentException(
-          s"config parse failed: expected 'key = value', got: $l")
-      }
-    }.toMap
-    val unknown = kv.keySet -- keys
-    require(unknown.isEmpty,
-      s"config validation failed: unknown keys: ${unknown.toSeq.sorted.mkString(", ")}")
-
-    def int(k: String, default: Int): Int = kv.get(k).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"$k: must be an integer, got: $v")
-      }
-    }.getOrElse(default)
-
-    val d = PipelineConfig()
-    PipelineConfig(
-      windowSize = kv.getOrElse("windowSize", d.windowSize),
-      saltBuckets = int("saltBuckets", d.saltBuckets),
-      maxTextLen = int("maxTextLen", d.maxTextLen),
-      maxToolLen = int("maxToolLen", d.maxToolLen),
-      shufflePartitions = int("shufflePartitions", d.shufflePartitions),
-      dedup = kv.get("dedup").map(_.toBoolean).getOrElse(d.dedup),
-      maxLineageWindows = int("maxLineageWindows", d.maxLineageWindows)
-    )
-  }
 }

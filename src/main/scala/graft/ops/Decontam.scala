@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * the eval side persists as a BUCKETED gram-hash store (the
   * signature-store pattern, `graft.ops.IncrementalDedup`): `publishEvalSet`
   * writes the distinct md5(n-gram) hashes bucketed by hash, and every
-  * later ingest's `contaminatedIds` semi-join reads the store side
+  * later ingest's `contaminatedIdsBloom` semi-join reads the store side
   * exchange-free — only the batch's (doc_id, hash) rows ever shuffle.
   * DecontamSpec plan-gates exactly that.
   */
@@ -158,20 +158,6 @@ object Decontam {
       .filter(col("set_id").isin(committed: _*))
   }
 
-  /** Ids of `docs` containing ANY stored eval n-gram. The store is the
-    * big side and provides its own hash partitioning (bucketed by gh);
-    * only the batch's narrow gram rows exchange.
-    */
-  def contaminatedIds(
-      docs: DataFrame,
-      store: DataFrame,
-      textCol: String = "text",
-      n: Int = DefaultN
-  ): DataFrame =
-    gramHashes(docs, textCol, n)
-      .join(store.select("gh"), Seq("gh"), "left_semi")
-      .select("doc_id").distinct()
-
   /** A broadcastable Bloom sketch of the store's gram hashes — built once
     * per eval-set version (distributed `treeAggregate` under
     * `stat.bloomFilter`; the store is the SMALL side, one narrow scan),
@@ -249,16 +235,17 @@ object Decontam {
     sketch
   }
 
-  /** [[contaminatedIds]] with a map-side Bloom pre-gate
-    * (graft.functions.BloomMightContain): the batch's gram rows are
-    * probed against the store sketch INSIDE the scan stage, so the
-    * ~(1 − fpp) of grams that match nothing never reach the exchange —
+  /** Ids of `docs` containing ANY stored eval n-gram, behind a map-side
+    * Bloom pre-gate (graft.functions.BloomMightContain): the batch's gram
+    * rows are probed against the store sketch INSIDE the scan stage, so
+    * the ~(1 − fpp) of grams that match nothing never reach the exchange —
     * at 100 TB the gate's cost collapses from "shuffle every gram of the
     * corpus" to "shuffle the contaminated grams plus fpp noise". The
-    * exact semi-join still runs over the survivors, so the result is
-    * bit-identical to the ungated gate (DecontamSpec asserts equality and
-    * the pre-exchange plan position; dd_decontam_bloom shares
-    * dd_decontam_ngram's DuckDB oracle).
+    * exact semi-join still runs over the survivors (the store is the big
+    * side and provides its own hash partitioning, bucketed by gh), so the
+    * result is bit-identical to the ungated semi-join (DecontamSpec
+    * asserts equality and the pre-exchange plan position;
+    * dd_decontam_bloom shares dd_decontam_ngram's DuckDB oracle).
     */
   def contaminatedIdsBloom(
       docs: DataFrame,
@@ -271,25 +258,4 @@ object Decontam {
       .filter(graft.functions.BloomMightContain.mightContain(col("gh"), sketch))
       .join(store.select("gh"), Seq("gh"), "left_semi")
       .select("doc_id").distinct()
-
-  /** The AUDIT TRAIL behind `contaminatedIds` (round-5 verdict item #2):
-    * one row per (training doc, eval doc) pair that shares at least one
-    * stored n-gram, with the shared-gram count — the evidence an operator
-    * needs to adjudicate a flag (one boilerplate 8-gram vs a verbatim
-    * answer). Same gram-hash join as the boolean gate (store side still
-    * bucketed by gh, exchange-free) plus one ids-only groupBy;
-    * `contaminatedIds` is exactly this frame projected to distinct
-    * train_doc_id (DecontamSpec asserts the identity).
-    */
-  def contaminationPairs(
-      docs: DataFrame,
-      store: DataFrame,
-      textCol: String = "text",
-      n: Int = DefaultN
-  ): DataFrame =
-    gramHashes(docs, textCol, n)
-      .withColumnRenamed("doc_id", "train_doc_id")
-      .join(store.select("gh", "eval_doc_id"), Seq("gh"))
-      .groupBy("train_doc_id", "eval_doc_id")
-      .agg(count(lit(1)).as("n_shared_grams"))
 }

@@ -79,22 +79,23 @@ object IncrementalDedup {
     concat_ws(":", col("band_idx"), col("band_hash"))
 
   /** A broadcastable Bloom sketch of the store's (band_idx, band_hash)
-    * keys — built once per store version (the store only changes when a
-    * batch commits), ~1.2 MB per million signature rows at 1% fpp. See
+    * keys, sized for twice the store's rows (at least `minCapacity`) so
+    * later merges fit — ~1.2 MB per million signature rows at 1% fpp. See
     * [[graft.functions.BloomMightContain]] for the scale rationale.
+    * Returns (sketch, capacity, store rows).
     */
-  def signatureBloom(
+  def storeSketch(
       store: DataFrame,
-      expectedItems: Long = 0L,
-      fpp: Double = 0.01
-  ): org.apache.spark.util.sketch.BloomFilter = {
-    val keyed = store.select(bloomKey.as("bk"))
-    val n = if (expectedItems > 0) expectedItems
-            else math.max(keyed.count(), 64L)
-    // stat.bloomFilter NPEs on zero rows (null aggregate buffer); the
-    // emptiness probe is a limit-1 scan, not a count
-    if (keyed.isEmpty) org.apache.spark.util.sketch.BloomFilter.create(n, fpp)
-    else keyed.stat.bloomFilter("bk", n, fpp)
+      minCapacity: Long,
+      fpp: Double
+  ): (org.apache.spark.util.sketch.BloomFilter, Long, Long) = {
+    val n = store.count()
+    val cap = math.max(minCapacity, 2 * n)
+    // stat.bloomFilter NPEs on zero rows (null aggregate buffer)
+    val sketch =
+      if (n == 0) org.apache.spark.util.sketch.BloomFilter.create(cap, fpp)
+      else store.select(bloomKey.as("bk")).stat.bloomFilter("bk", cap, fpp)
+    (sketch, cap, n)
   }
 
   /** [[duplicateIds]] with a map-side Bloom pre-gate: the batch's
@@ -178,15 +179,10 @@ object IncrementalDedup {
       fpp: Double = 0.01
   ): (org.apache.spark.util.sketch.BloomFilter, Long, Long) =
     loadRollingSketch(catalog, fpp).getOrElse {
-      val store = signatureStore(catalog, nBuckets)
-      val n = store.count()
-      val cap = math.max(minCapacity, 2 * n)
-      // stat.bloomFilter NPEs on zero rows (null aggregate buffer)
-      val sketch =
-        if (n == 0) org.apache.spark.util.sketch.BloomFilter.create(cap, fpp)
-        else store.select(bloomKey.as("bk")).stat.bloomFilter("bk", cap, fpp)
+      val built @ (sketch, cap, n) =
+        storeSketch(signatureStore(catalog, nBuckets), minCapacity, fpp)
       saveRollingSketch(catalog, sketch, cap, n, fpp)
-      (sketch, cap, n)
+      built
     }
 
   /** Merge a batch's about-to-append signature keys into the rolling
@@ -223,7 +219,7 @@ object IncrementalDedup {
   }
 
   /** The AUDIT TRAIL behind [[duplicateIds]] (round-6, the near-dup twin
-    * of `Decontam.contaminationPairs`): one row per (new doc, stored doc)
+    * of the `dd_decontam_pairs` query): one row per (new doc, stored doc)
     * pair that collides on at least one band, with the colliding-band
     * count — the evidence needed to adjudicate WHY an ingest batch dropped
     * a document. Same band equi-join (store side still bucketed and

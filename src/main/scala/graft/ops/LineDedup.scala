@@ -32,17 +32,8 @@ object LineDedup {
   /** Words per line unit (the value the dd_line_dedup oracle mirrors). */
   val UnitWords = 8
 
-  /** The per-doc array of unit hashes as one codegen'd expression:
-    * flatten(lines -> per-line unit md5s), order = document order.
-    */
-  private[graft] def unitArraySql(textCol: String): String =
-    s"""flatten(transform(split(lower($textCol), chr(10)), l ->
-       |  transform(sequence(1, greatest(1, CAST(ceil(size(split(l, ' ')) / ${UnitWords}.0) AS INT))),
-       |    u -> md5(concat_ws(' ', slice(split(l, ' '), (u - 1) * $UnitWords + 1, $UnitWords))))))"""
-      .stripMargin.replace("\n", " ")
-
-  /** The CASED twin of [[unitArraySql]]: the unit texts themselves, at
-    * the same indices (lowercasing never moves a whitespace boundary,
+  /** The CASED twin of the [[unitHashes]] array: the unit texts
+    * themselves, at the same indices (lowercasing never moves a whitespace boundary,
     * so the two arrays align position-for-position). Used only by
     * [[scrubText]] — the hash-only operators never materialize it.
     */
@@ -56,9 +47,8 @@ object LineDedup {
     * order (line_idx is 0-based). One Generate + projection; unit TEXT
     * never leaves the map task — only its md5. The unit array is the
     * codegen'd graft.functions.LineUnitHashes expression over the
-    * builtin newline split — bit-identical to [[unitArraySql]]'s nested
-    * HOF form (round-8; LineUnitHashesSpec gates the equivalence, and
-    * the SQL string remains the oracle mirror's source of truth).
+    * builtin newline split — bit-identical to the nested-HOF SQL form it
+    * replaced (round-8; WordGramHashesSpec gates the equivalence).
     */
   def unitHashes(df: DataFrame, textCol: String = "text"): DataFrame =
     df.select(col("doc_id"),

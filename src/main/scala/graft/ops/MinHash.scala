@@ -90,19 +90,4 @@ object MinHash {
     sig.unpersist()
     pairs
   }
-
-  // --- DuckDB mirrors (generated from the same bands/rows) ---
-
-  /** SQL for the signature CTE columns mh1..mhN over a list column expr. */
-  def signatureSqlDuck(toksExpr: String, numPerms: Int): String =
-    (1 to numPerms).map { k =>
-      s"list_min(list_transform($toksExpr, w -> md5(w || 's$k'))) AS mh$k"
-    }.mkString(", ")
-
-  /** SQL expr for band j's hash over mh columns. */
-  def bandHashSqlDuck(bands: Int, rows: Int, band: Int): String = {
-    val parts = (band * rows + 1 to (band + 1) * rows).map(k => s"mh$k")
-    if (parts.size == 1) s"md5(${parts.head})"
-    else s"md5(${parts.mkString(" || '|' || ")})"
-  }
 }

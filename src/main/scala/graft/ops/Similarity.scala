@@ -144,17 +144,6 @@ object Similarity {
     IvfModel(m0.centroids.map { case (c, cv) => c -> byCell.getOrElse(c, cv) })
   }
 
-  /** Compatibility surface: (centroids, assignments) as DataFrames.
-    * Assignments are a pure projection over `e` (no shuffle).
-    */
-  def buildIvf(spark: SparkSession, e: DataFrame, nCells: Int): (DataFrame, DataFrame) = {
-    val model = buildIvfModel(e, nCells)
-    import spark.implicits._
-    val cents = model.centroids.map { case (c, cv) => (c, cv.toSeq) }
-      .toDF("cell", "cv")
-    (cents, e.select(col("vec_id"), assignCell(model).as("cell")))
-  }
-
   /** IVF-probed approximate top-k: search only the `nprobe` cells nearest
     * to the query vector. Probe selection runs on the driver (nCells dot
     * products); the cluster side is one filter+projection pass ending in

@@ -81,25 +81,11 @@ object QualityScore {
   /** Mean hashed-bucket weight of `textCol`'s words (the `lex` feature).
     * The weight sum is the codegen'd graft.functions.LexSum expression —
     * bit-identical to the aggregate(transform(...)) HOF fold it replaced
-    * (round-8; LexSumSpec gates the equivalence, [[lexColHof]] keeps the
-    * reference form).
+    * (round-8; LexSumSpec gates the equivalence against that form).
     */
   def lexCol(textCol: String = "text"): Column = {
     val ws = split(lower(col(textCol)), " ")
     graft.functions.LexSum.lexSum(ws) / size(ws).cast("double")
-  }
-
-  /** The reference HOF form of [[lexCol]] — kept ONLY as the equivalence
-    * oracle for LexSumSpec; not used in any query path.
-    */
-  private[graft] def lexColHof(textCol: String = "text"): Column = {
-    val ws = split(lower(col(textCol)), " ")
-    val wsum = aggregate(
-      transform(ws, w => element_at(typedLit(weights),
-        (pmod(conv(substring(md5(w), 1, 8), 16, 10).cast("long"),
-          lit(Buckets)) + 1).cast("int"))),
-      lit(0.0), (acc, x) => acc + x)
-    wsum / size(ws).cast("double")
   }
 
   /** The quality score (already rounded to 4 decimals — safe to threshold). */

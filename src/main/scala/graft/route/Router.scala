@@ -2,7 +2,6 @@ package graft.route
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.sink.TranscriptCatalog
 
 /** Router: fan parsed+enriched rows out to per-sink tables keyed by route
   * predicate (first match wins).
@@ -39,22 +38,6 @@ object Router {
     routes.foldRight(lit(fallbackRoute): Column) { case (r, acc) =>
       when(r.predicate, lit(r.name)).otherwise(acc)
     }
-
-  /** Assign routes and write one partitioned sink table; returns per-route
-    * row counts (computed from the written table so the metric reflects what
-    * actually landed).
-    */
-  def fanOut(
-      df: DataFrame,
-      routes: Seq[Route],
-      catalog: TranscriptCatalog,
-      table: String = "routed"
-  ): Map[String, Long] = {
-    val routed = df.withColumn("route", routeColumn(routes))
-    catalog.overwritePartitions(routed, table, Seq("route"))
-    catalog.read(table).groupBy("route").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
 
   /** Route counts without writing (for oracle-checked queries/tests). */
   def routeCounts(df: DataFrame, routes: Seq[Route]): DataFrame =

@@ -9,12 +9,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Apply a SparkSessionExtensions' function injections to a live session
-    * (test hook for the spark.sql.extensions path).
-    */
-  def registerInjectedFunctions(
-      ext: SparkSessionExtensions,
-      spark: SparkSession): Unit =
-    ext.registerFunctions(spark.sessionState.functionRegistry)
 }

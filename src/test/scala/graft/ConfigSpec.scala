@@ -1,51 +1,15 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.model.PipelineConfig
 
-/** File-based config load + validation (reference: load_config.go:13-42). */
+/** PipelineConfig validation (reference: internal/shared/configs/config.go:4-33). */
 class ConfigSpec extends AnyFunSuite with Matchers {
-
-  private def write(content: String): String = {
-    val p = Files.createTempFile("graft-config", ".conf")
-    Files.writeString(p, content)
-    p.toString
-  }
-
-  test("loads keys, keeps defaults for the rest, ignores comments") {
-    val cfg = PipelineConfig.fromFile(write(
-      """# pipeline config
-        |windowSize = hour
-        |saltBuckets = 8
-        |
-        |dedup = false
-        |""".stripMargin))
-    cfg.windowSize shouldBe "hour"
-    cfg.saltBuckets shouldBe 8
-    cfg.dedup shouldBe false
-    cfg.maxTextLen shouldBe PipelineConfig().maxTextLen
-  }
-
-  test("rejects unknown keys with a readable message") {
-    val e = intercept[IllegalArgumentException] {
-      PipelineConfig.fromFile(write("windoSize = hour"))
-    }
-    e.getMessage should include("unknown keys")
-    e.getMessage should include("windoSize")
-  }
-
-  test("rejects non-integer values with the field name") {
-    val e = intercept[IllegalArgumentException] {
-      PipelineConfig.fromFile(write("saltBuckets = many"))
-    }
-    e.getMessage should include("saltBuckets")
-  }
 
   test("field validation still applies (invalid windowSize)") {
     val e = intercept[IllegalArgumentException] {
-      PipelineConfig.fromFile(write("windowSize = day"))
+      PipelineConfig(windowSize = "day")
     }
     e.getMessage should include("invalid window size")
   }

@@ -25,7 +25,7 @@ class DecontamSpec extends SparkSpecBase {
       2L -> "an unrelated page with entirely different words in it today",
       3L -> "short page").toDF("doc_id", "text")
     val store = Decontam.evalGramStore(catalog, nBuckets = 4)
-    Decontam.contaminatedIds(train, store)
+    ParityOracles.contaminatedIds(train, store)
       .collect().map(_.getLong(0)) shouldBe Array(1L)
   }
 
@@ -44,7 +44,7 @@ class DecontamSpec extends SparkSpecBase {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val hits = Decontam.contaminatedIds(train, store)
+      val hits = Decontam.contaminatedIdsBloom(train, store, Decontam.gramBloom(store))
       hits.collect().map(_.getLong(0)) shouldBe Array(1L)
       val plan = hits.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
@@ -67,13 +67,13 @@ class DecontamSpec extends SparkSpecBase {
       1L -> s"padding before $evalSentence padding after this page continues on",
       2L -> s"padding before $evalSentence2 padding after this page continues on")
       .toDF("doc_id", "text")
-    Decontam.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
+    ParityOracles.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
       .collect().map(_.getLong(0)) shouldBe Array(1L)
     // The corrected set drops the old sentence and adds the new one —
     // republish under the SAME id must remove the stale grams entirely.
     Decontam.publishEvalSet(catalog,
       Seq(901L -> evalSentence2).toDF("doc_id", "text"), nBuckets = 4, setId = "bench")
-    Decontam.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
+    ParityOracles.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
       .collect().map(_.getLong(0)) shouldBe Array(2L)
     Decontam.committedSets(catalog) shouldBe Seq("bench")
   }
@@ -89,11 +89,11 @@ class DecontamSpec extends SparkSpecBase {
       1L -> s"padding before $evalSentence padding after this page continues on",
       2L -> s"padding before $evalSentence2 padding after this page continues on")
       .toDF("doc_id", "text")
-    Decontam.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
+    ParityOracles.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
       .collect().map(_.getLong(0)).sorted shouldBe Array(1L, 2L)
     Decontam.retractEvalSet(catalog, "s1", nBuckets = 4)
     Decontam.committedSets(catalog) shouldBe Seq("s2")
-    Decontam.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
+    ParityOracles.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
       .collect().map(_.getLong(0)) shouldBe Array(2L)
   }
 
@@ -114,7 +114,7 @@ class DecontamSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
     // uncommitted ⇒ invisible (the partial-publish gate) and detectable
     Decontam.committedSets(catalog) shouldBe empty
-    Decontam.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
+    ParityOracles.contaminatedIds(train, Decontam.evalGramStore(catalog, 4))
       .count() shouldBe 0L
     // the retry publishes cleanly (step 1 clears the partial partition —
     // no duplicate grams) and the set gates
@@ -122,7 +122,7 @@ class DecontamSpec extends SparkSpecBase {
       Seq(900L -> evalSentence).toDF("doc_id", "text"), nBuckets = 4, setId = "ghost")
     val store = Decontam.evalGramStore(catalog, 4)
     store.count() shouldBe store.select("gh").distinct().count()
-    Decontam.contaminatedIds(train, store)
+    ParityOracles.contaminatedIds(train, store)
       .collect().map(_.getLong(0)) shouldBe Array(1L)
   }
 
@@ -134,19 +134,18 @@ class DecontamSpec extends SparkSpecBase {
     Decontam.publishEvalSet(catalog, docs.filter(col("doc_id") >= 450), nBuckets = 4)
     val store = Decontam.evalGramStore(catalog, 4)
     val train = docs.filter(col("doc_id") < 450)
-    val pairs = Decontam.contaminationPairs(train, store).collect()
+    val pairs = OpsQueries.queries("dd_decontam_pairs")(spark, dir).collect()
+    pairs should not be empty
     pairs.foreach { r =>
+      r.getLong(0) should be < 450L
       r.getLong(1) should be >= 450L
       r.getLong(2) should be >= 1L
     }
-    // the boolean gate IS the pair frame projected to distinct train ids
+    // the store path's boolean gate IS the pair frame projected to
+    // distinct train ids
     val viaPairs = pairs.map(_.getLong(0)).toSet
-    Decontam.contaminatedIds(train, store)
+    Decontam.contaminatedIdsBloom(train, store, Decontam.gramBloom(store))
       .collect().map(_.getLong(0)).toSet shouldBe viaPairs
-    // and the catalog query row agrees with the store path
-    OpsQueries.queries("dd_decontam_pairs")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet shouldBe
-      pairs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
   }
 
   test("bloom pre-gate: identical result, pre-exchange probe, real pruning") {
@@ -162,7 +161,7 @@ class DecontamSpec extends SparkSpecBase {
     // no false negatives ever: the gated gate equals the ungated one
     val gated = Decontam.contaminatedIdsBloom(train, store, sketch)
     gated.collect().map(_.getLong(0)).toSet shouldBe
-      Decontam.contaminatedIds(train, store).collect().map(_.getLong(0)).toSet
+      ParityOracles.contaminatedIds(train, store).collect().map(_.getLong(0)).toSet
 
     // the catalog rows agree (dd_decontam_bloom shares the ngram oracle)
     OpsQueries.queries("dd_decontam_bloom")(spark, dir)
@@ -306,7 +305,7 @@ class DecontamSpec extends SparkSpecBase {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     Decontam.publishEvalSet(catalog, docs.filter(col("doc_id") >= 450))
     val store = Decontam.evalGramStore(catalog)
-    val viaStore = Decontam
+    val viaStore = ParityOracles
       .contaminatedIds(docs.filter(col("doc_id") < 450), store)
       .collect().map(_.getLong(0)).toSet
     val viaCatalogQuery = OpsQueries.queries("dd_decontam_ngram")(spark, dir)

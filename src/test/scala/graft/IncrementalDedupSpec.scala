@@ -71,7 +71,7 @@ class IncrementalDedupSpec extends SparkSpecBase {
       "doc_id", "toks", Bands, Rows)
     catalog.append(sigs1, "signatures")
     val store = catalog.read("signatures")
-    val sketch = IncrementalDedup.signatureBloom(store)
+    val (sketch, _, _) = IncrementalDedup.storeSketch(store, 1L << 16, 0.01)
     val day2 = toks(Seq(
       10L -> "the quick brown fox jumps over the lazy dog",
       11L -> "a completely different document about spark physical plans indeed",

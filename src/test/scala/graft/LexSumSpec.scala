@@ -27,7 +27,7 @@ class LexSumSpec extends SparkSpecBase {
             ELSE 'of' END))""").as("text"))
     val cmp = rows.select(
       QualityScore.lexCol("text").as("fast"),
-      QualityScore.lexColHof("text").as("ref"))
+      ParityOracles.lexColHof("text").as("ref"))
     cmp.filter(col("fast") =!= col("ref")).count() shouldBe 0
     cmp.filter(col("fast").isNull =!= col("ref").isNull).count() shouldBe 0
     // the full score too (lex appears twice: signal + hinge)

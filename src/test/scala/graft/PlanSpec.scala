@@ -26,7 +26,7 @@ class PlanSpec extends SparkSpecBase {
 
   test("rollup plan has partial aggregation before the exchange (map-side combine)") {
     val (valid, _) = TranscriptParse.parse(TranscriptGen.generate(spark, 1000, 2))
-    val p = plan(Rollup.counts(valid, Seq("tool")))
+    val p = plan(Rollup.explodedRollup(valid))
     // Catalyst's two-phase agg: HashAggregate(partial) -> Exchange -> HashAggregate(final)
     val partialIdx = p.indexOf("partial_count")
     val exchangeIdx = p.indexOf("Exchange hashpartitioning")
@@ -103,8 +103,8 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("salted rollup produces two exchanges (stage-1 salt spread, stage-2 final)") {
-    val df = TranscriptGen.generate(spark, 1000, 2)
-    val p = plan(Rollup.saltedCounts(df, Seq("tool")))
+    val (valid, _) = TranscriptParse.parse(TranscriptGen.generate(spark, 1000, 2))
+    val p = plan(Rollup.explodedRollup(valid))
     "Exchange hashpartitioning".r.findAllIn(p).size shouldBe 2
     p should include("salt")
   }

@@ -16,6 +16,8 @@ class RollupSpec extends SparkSpecBase {
 
   private val w0 = Timestamp.from(java.time.Instant.parse("2025-12-28T18:03:00Z"))
 
+  private val Keys = Seq("conv_id", "window_start", "window_size", "dim", "key")
+
   private def aggDf(rows: Seq[(String, Timestamp, String, String, String, Long)]) =
     rows.toDF("conv_id", "window_start", "window_size", "dim", "key", "cnt")
 
@@ -25,7 +27,7 @@ class RollupSpec extends SparkSpecBase {
       ("c1", w0, "minute", "tool", "edit", 2L)))
     val partial = aggDf(Seq(
       ("c1", w0, "minute", "tool", "bash", 4L)))
-    val merged = Rollup.mergePartials(existing, partial)
+    val merged = Rollup.mergePartials(existing, partial, Keys)
       .orderBy("key").collect()
     merged.map(r => (r.getString(4), r.getLong(5))) shouldBe
       Array(("bash", 7L), ("edit", 2L))
@@ -34,7 +36,7 @@ class RollupSpec extends SparkSpecBase {
   test("merge: new keys are inserted on first sight (rolluper_test.go:52-102)") {
     val existing = aggDf(Seq(("c1", w0, "minute", "tool", "bash", 3L)))
     val partial = aggDf(Seq(("c1", w0, "minute", "tool", "web", 5L)))
-    val merged = Rollup.mergePartials(existing, partial).orderBy("key").collect()
+    val merged = Rollup.mergePartials(existing, partial, Keys).orderBy("key").collect()
     merged.map(r => (r.getString(4), r.getLong(5))) shouldBe
       Array(("bash", 3L), ("web", 5L))
   }
@@ -42,7 +44,7 @@ class RollupSpec extends SparkSpecBase {
   test("merge: repeated merges accumulate (rolluper_test.go:104-161)") {
     val existing = aggDf(Seq(("c1", w0, "minute", "tool", "bash", 1L)))
     val p = aggDf(Seq(("c1", w0, "minute", "tool", "bash", 1L)))
-    val m3 = Rollup.mergePartials(Rollup.mergePartials(existing, p), p).collect()
+    val m3 = Rollup.mergePartials(Rollup.mergePartials(existing, p, Keys), p, Keys).collect()
     m3.map(_.getLong(5)) shouldBe Array(3L)
   }
 
@@ -53,7 +55,7 @@ class RollupSpec extends SparkSpecBase {
     val partial = aggDf(Seq(
       ("c2", w0, "minute", "tool", "bash", 1L),
       ("c1", w1, "minute", "tool", "bash", 1L)))
-    val merged = Rollup.mergePartials(existing, partial).collect()
+    val merged = Rollup.mergePartials(existing, partial, Keys).collect()
     merged.length shouldBe 3
     merged.map(_.getLong(5)).toSet shouldBe Set(1L)
   }
@@ -73,7 +75,7 @@ class RollupSpec extends SparkSpecBase {
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("dim", "key").collect()
           .map(r => (r.getString(3), r.getString(4), r.getLong(5))).toSeq
-      canon(Rollup.mergePartials(a, b)) shouldBe canon(Rollup.mergePartials(b, a))
+      canon(Rollup.mergePartials(a, b, Keys)) shouldBe canon(Rollup.mergePartials(b, a, Keys))
     }
   }
 
@@ -85,8 +87,10 @@ class RollupSpec extends SparkSpecBase {
           r.getTimestamp(r.fieldIndex("window_start")),
           r.getString(r.fieldIndex("tool")),
           r.getLong(r.fieldIndex("cnt")))).toSeq
-    canon(Rollup.saltedCounts(df, Seq("tool"), saltBuckets = 7)) shouldBe
-      canon(Rollup.counts(df, Seq("tool")))
+    val windowed = df.withColumn("window_start", Rollup.windowStart(col("ts"), "minute"))
+    canon(Rollup.saltedCounts(windowed, Seq("window_start", "conv_id", "tool"),
+      col("turn_idx"), saltBuckets = 7)) shouldBe
+      canon(ParityOracles.counts(df, Seq("tool")))
   }
 
   test("map-valued sink form has sorted keys and correct totals") {
@@ -119,9 +123,10 @@ class RollupSpec extends SparkSpecBase {
         .map(r => (r.getString(r.fieldIndex("conv_id")),
           r.getTimestamp(r.fieldIndex("window_start")),
           r.getLong(r.fieldIndex(cntCol)))).toSeq
-    val twoStage = Rollup.distinctCounts(df, "tool")
-    val direct = df
-      .withColumn("window_start", Rollup.windowStart(col("ts"), "minute"))
+    val windowed = df.withColumn("window_start", Rollup.windowStart(col("ts"), "minute"))
+    val twoStage = Rollup.distinctCounts(windowed, Seq("window_start", "conv_id"),
+      "tool", "n_distinct_tool")
+    val direct = windowed
       .groupBy("window_start", "conv_id")
       .agg(countDistinct(col("tool")).as("n"))
     canon(twoStage, "n_distinct_tool") shouldBe canon(direct, "n")

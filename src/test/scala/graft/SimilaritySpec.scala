@@ -17,7 +17,8 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("IVF assignment covers every vector exactly once") {
-    val (_, assign) = Similarity.buildIvf(spark, e, nCells = 16)
+    val model = Similarity.buildIvfModel(e, nCells = 16)
+    val assign = e.select(col("vec_id"), Similarity.assignCell(model).as("cell"))
     assign.count() shouldBe e.count()
     assign.select("vec_id").distinct().count() shouldBe e.count()
     assign.select("cell").distinct().count() should be <= 16L

@@ -23,7 +23,9 @@ class SkewSpec extends SparkSpecBase {
 
   test("salted rollup is exact under 95% single-key skew") {
     val df = skewed(20000)
-    val out = Rollup.saltedCounts(df, Seq("tool"), saltBuckets = 16)
+    val out = Rollup.saltedCounts(
+        df.withColumn("window_start", Rollup.windowStart(col("ts"), "minute")),
+        Seq("window_start", "conv_id", "tool"), col("turn_idx"), saltBuckets = 16)
       .collect().map(r => r.getString(r.fieldIndex("conv_id")) ->
         r.getLong(r.fieldIndex("cnt"))).toMap
     out("conv-hot") shouldBe 19000L

@@ -467,7 +467,7 @@ class StreamingSpec extends SparkSpecBase {
       .orderBy("window_start", "conv_id", "tool")
       .collect().map(_.toString).toSeq
     val (valid, _) = graft.parse.TranscriptParse.parse(TranscriptGen.generate(spark, 2000, 2))
-    val batch = graft.agg.Rollup.counts(valid, Seq("tool"))
+    val batch = ParityOracles.counts(valid, Seq("tool"))
       .orderBy("window_start", "conv_id", "tool")
       .collect().map(_.toString).toSeq
     streamed shouldBe batch
